@@ -25,21 +25,14 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .operators.intervals import identify_interacting_residues
-from .operators.islands import find_islands
 from .operators.screen import screen_binders
-from .operators.spatial import contact_pairs_grid
 from .operators.structures import (
     pymol_scripts,
     write_interaction_cifs,
     write_overlay_models,
 )
-from .params import (
-    PARTNER_ISLAND_MAX_GAP,
-    PARTNER_ISLAND_MIN_LENGTH,
-    ScreenParams,
-)
-from .plans.pipeline import interaction_report
+from .params import ScreenParams
+from .plans.pipeline import compute_contacts, interaction_report, partner_islands
 from .session import get_spark
 from .sources.af3_json import read_pae_long, read_summary_confidences
 from .sources.cif import chains_from_atoms, read_atoms
@@ -114,39 +107,44 @@ def run(args: argparse.Namespace, spark: SparkSession | None = None) -> dict:
     own_session = spark is None
     if own_session:
         spark = get_spark("af3spark-cli")
+    try:
+        if args.watch or args.watch_once:
+            return _watch(args, spark, params, out_root)
+        if args.ingest:
+            from .plans.ingest import ingest_corpus
 
-    if args.watch or args.watch_once:
-        from .streaming.ingest import watch_summaries
-
-        out_path = os.path.join(out_root, "screened_stream")
-        q = watch_summaries(
-            spark,
-            args.input_dir,
-            out_path,
-            os.path.join(out_root, "screened_stream_ckpt"),
-            params,
-        )
-        if args.watch_once:
-            q.processAllAvailable()
-            q.stop()
-        else:
-            q.awaitTermination()
-        n = spark.read.parquet(out_path).count() if os.path.exists(out_path) else 0
+            paths = ingest_corpus(spark, args.input_dir, args.ingest)
+            return {"csv": None, "n_binders": None, "n_report_rows": None,
+                    "interaction_cifs": 0, "overlay_files": 0, "tables": paths}
+        return _screen(args, spark, params, out_root)
+    finally:
         if own_session:
             spark.stop()
-        return {"csv": None, "n_binders": n, "n_report_rows": None,
-                "interaction_cifs": 0, "overlay_files": 0,
-                "stream_out": out_path}
 
-    if args.ingest:
-        from .plans.ingest import ingest_corpus
 
-        paths = ingest_corpus(spark, args.input_dir, args.ingest)
-        if own_session:
-            spark.stop()
-        return {"csv": None, "n_binders": None, "n_report_rows": None,
-                "interaction_cifs": 0, "overlay_files": 0, "tables": paths}
+def _watch(args, spark: SparkSession, params: ScreenParams, out_root: str) -> dict:
+    from .streaming.ingest import watch_summaries
 
+    out_path = os.path.join(out_root, "screened_stream")
+    q = watch_summaries(
+        spark,
+        args.input_dir,
+        out_path,
+        os.path.join(out_root, "screened_stream_ckpt"),
+        params,
+    )
+    if args.watch_once:
+        q.processAllAvailable()
+        q.stop()
+    else:
+        q.awaitTermination()
+    n = spark.read.parquet(out_path).count() if os.path.exists(out_path) else 0
+    return {"csv": None, "n_binders": n, "n_report_rows": None,
+            "interaction_cifs": 0, "overlay_files": 0,
+            "stream_out": out_path}
+
+
+def _screen(args, spark: SparkSession, params: ScreenParams, out_root: str) -> dict:
     if args.from_tables:
         from .plans.ingest import load_ingested
 
@@ -161,102 +159,97 @@ def run(args: argparse.Namespace, spark: SparkSession | None = None) -> dict:
         pae = read_pae_long(spark, args.input_dir)
 
     # shared subplans computed ONCE, reused across report + sinks
-    # (reference recomputed them per output path — inefficiencies I1/I2)
+    # (reference recomputed them per output path — inefficiencies I1/I2);
+    # released on every exit path, also on a borrowed session
     binders = screen_binders(preds, params).cache()
-    interacting = identify_interacting_residues(pae, chains, params, jobs=binders)
-    contacts = contact_pairs_grid(atoms, interacting, params).cache()
+    contacts = compute_contacts(preds, chains, pae, atoms, params).cache()
+    try:
+        report = interaction_report(preds, chains, pae, atoms, params, contacts=contacts)
+        if getattr(args, "distributed_csv", False):
+            from .plans.pipeline import write_report
 
-    report = interaction_report(preds, chains, pae, atoms, params, contacts=contacts)
-    if getattr(args, "distributed_csv", False):
-        from .plans.pipeline import write_report
+            csv_path = write_report(report, out_root, params)
+            n_rows = spark.read.option("header", True).csv(csv_path).count()
+        else:
+            # reference parity: ONE file with the exact reference name; the
+            # report is one row per binder island pair — small relative to
+            # the corpus. --distributed-csv switches to the parallel sink.
+            csv_path = os.path.join(out_root, params.csv_name())
+            pdf = report.toPandas()
+            pdf.to_csv(csv_path, index=False)
+            n_rows = len(pdf)
 
-        csv_path = write_report(report, out_root, params)
-        n_rows = spark.read.option("header", True).csv(csv_path).count()
-    else:
-        # reference parity: ONE file with the exact reference name; the
-        # report is one row per binder island pair — small relative to
-        # the corpus. --distributed-csv switches to the parallel sink.
-        csv_path = os.path.join(out_root, params.csv_name())
-        pdf = report.toPandas()
-        pdf.to_csv(csv_path, index=False)
-        n_rows = len(pdf)
+        result = {"csv": csv_path, "n_binders": binders.count(),
+                  "n_report_rows": n_rows, "interaction_cifs": 0,
+                  "overlay_files": 0, "pae_csvs": 0}
 
-    result = {"csv": csv_path, "n_binders": binders.count(),
-              "n_report_rows": n_rows, "interaction_cifs": 0,
-              "overlay_files": 0, "pae_csvs": 0}
+        if getattr(args, "emit_pae_csv", True):
+            from .sources.af3_json import write_pae_matrix_csvs
 
-    if getattr(args, "emit_pae_csv", True):
-        from .sources.af3_json import write_pae_matrix_csvs
+            # Reference parity: _pae.csv is written only for jobs that pass
+            # the binder screen (extract_pae_data runs inside the is_binder
+            # branch of process_full_data_files, reference :567-575) — a
+            # drop-in user diffing output trees must not see extra files.
+            pae_binders = pae.join(binders.select("job"), "job", "left_semi")
+            result["pae_csvs"] = write_pae_matrix_csvs(pae_binders, out_root).count()
 
-        # Reference parity: _pae.csv is written only for jobs that pass
-        # the binder screen (extract_pae_data runs inside the is_binder
-        # branch of process_full_data_files, reference :567-575) — a
-        # drop-in user diffing output trees must not see extra files.
-        pae_binders = pae.join(binders.select("job"), "job", "left_semi")
-        result["pae_csvs"] = write_pae_matrix_csvs(pae_binders, out_root).count()
+        if getattr(args, "write_log", False) and not args.from_tables:
+            from .sources.af3_json import read_summary_errors
 
-    if getattr(args, "write_log", False) and not args.from_tables:
-        from .sources.af3_json import read_summary_errors
+            log_path = os.path.join(out_root, "process_af3_outputs.log")
+            with open(log_path, "w") as fh:
+                for r in read_summary_errors(spark, args.input_dir).collect():
+                    fh.write(f"ERROR - Invalid JSON: {r.path}: {r.raw_prefix}\n")
+            result["log"] = log_path
 
-        log_path = os.path.join(out_root, "process_af3_outputs.log")
-        with open(log_path, "w") as fh:
-            for r in read_summary_errors(spark, args.input_dir).collect():
-                fh.write(f"ERROR - Invalid JSON: {r.path}: {r.raw_prefix}\n")
-        result["log"] = log_path
+        if not args.skip_structures:
+            # the report's own level-1 islands over the same cached contacts
+            islands = partner_islands(contacts).select("job", "partner_res")
 
-    if not args.skip_structures:
-        partner_islands = find_islands(
-            contacts.select("job", "partner_res").distinct(),
-            ["job"],
-            "partner_res",
-            PARTNER_ISLAND_MAX_GAP,
-            PARTNER_ISLAND_MIN_LENGTH,
-            island_col="p_isl",
-        ).select("job", "partner_res")
+            int_dir = os.path.join(out_root, params.interaction_dir())
+            written = write_interaction_cifs(
+                atoms, islands, int_dir, params, jobs=binders
+            ).collect()
+            result["interaction_cifs"] = len(written)
 
-        int_dir = os.path.join(out_root, params.interaction_dir())
-        written = write_interaction_cifs(
-            atoms, partner_islands, int_dir, params, jobs=binders
-        ).collect()
-        result["interaction_cifs"] = len(written)
+            ov_dir = os.path.join(out_root, params.overlay_dir())
+            # collect the sink result ONCE (the writer is a grouped-map UDF;
+            # re-evaluating the plan would rewrite every file)
+            overlay_rows = write_overlay_models(
+                atoms, islands, ov_dir, params, jobs=binders
+            ).collect()
+            files = spark.createDataFrame(
+                [
+                    (os.path.basename(os.path.dirname(r.path)), r.path)
+                    for r in overlay_rows
+                ]
+                or [("", "")],
+                "job string, path string",
+            ).filter(F.col("job") != "")
+            scripts = pymol_scripts(files, ov_dir).collect()
+            result["overlay_files"] = len(overlay_rows) + len(scripts)
 
-        ov_dir = os.path.join(out_root, params.overlay_dir())
-        # collect the sink result ONCE (the writer is a grouped-map UDF;
-        # re-evaluating the plan would rewrite every file)
-        overlay_rows = write_overlay_models(
-            atoms, partner_islands, ov_dir, params, jobs=binders
-        ).collect()
-        files = spark.createDataFrame(
-            [
-                (os.path.basename(os.path.dirname(r.path)), r.path)
-                for r in overlay_rows
-            ]
-            or [("", "")],
-            "job string, path string",
-        ).filter(F.col("job") != "")
-        scripts = pymol_scripts(files, ov_dir).collect()
-        result["overlay_files"] = len(overlay_rows) + len(scripts)
+            if getattr(args, "rmsd", False):
+                from .operators.structures import superimpose_models
 
-        if getattr(args, "rmsd", False):
-            from .operators.structures import superimpose_models
-
-            rmsd_path = os.path.join(out_root, "overlay_rmsd.csv")
-            rmsd_pdf = (
-                superimpose_models(
-                    atoms.join(binders.select("job"), "job", "left_semi"),
-                    ref_model=0,
+                rmsd_path = os.path.join(out_root, "overlay_rmsd.csv")
+                rmsd_pdf = (
+                    superimpose_models(
+                        atoms.join(binders.select("job"), "job", "left_semi"),
+                        ref_model=0,
+                    )
+                    .select("job", "model_id", "n_atoms", F.round("rmsd", 4).alias("rmsd"))
+                    .orderBy("job", "model_id")
+                    .toPandas()
                 )
-                .select("job", "model_id", "n_atoms", F.round("rmsd", 4).alias("rmsd"))
-                .orderBy("job", "model_id")
-                .toPandas()
-            )
-            rmsd_pdf.to_csv(rmsd_path, index=False)
-            result["rmsd_csv"] = rmsd_path
-            result["rmsd_rows"] = len(rmsd_pdf)
+                rmsd_pdf.to_csv(rmsd_path, index=False)
+                result["rmsd_csv"] = rmsd_path
+                result["rmsd_rows"] = len(rmsd_pdf)
 
-    if own_session:
-        spark.stop()
-    return result
+        return result
+    finally:
+        binders.unpersist()
+        contacts.unpersist()
 
 
 def main(argv: list[str] | None = None) -> None:

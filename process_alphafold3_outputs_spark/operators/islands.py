@@ -23,6 +23,18 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def island_id(value_col: str, max_gap: int, partition_cols: Sequence[str]) -> Column:
+    """Running island number over ``value_col`` within the partition: a
+    new island starts where the value jumps by more than ``max_gap``.
+    Equal values have a gap of 0, so duplicate rows never break an
+    island (callers that count members count DISTINCT values)."""
+    w = Window.partitionBy(*partition_cols).orderBy(F.col(value_col))
+    gap_break: Column = F.when(
+        F.col(value_col) - F.lag(value_col).over(w) > max_gap, 1
+    ).otherwise(0)
+    return F.sum(gap_break).over(w.rowsBetween(Window.unboundedPreceding, 0))
+
+
 def find_islands(
     df: DataFrame,
     partition_cols: Sequence[str],
@@ -42,16 +54,7 @@ def find_islands(
     the window ``orderBy`` makes ordering explicit.
     """
     part = [F.col(c) for c in partition_cols]
-    w = Window.partitionBy(*part).orderBy(F.col(value_col))
-    gap_break: Column = F.when(
-        F.col(value_col) - F.lag(value_col).over(w) > max_gap, 1
-    ).otherwise(0)
-    w_cum = w.rowsBetween(Window.unboundedPreceding, 0)
-    out = (
-        df.withColumn("_brk", gap_break)
-        .withColumn("_isl", F.sum("_brk").over(w_cum))
-        .drop("_brk")
-    )
+    out = df.withColumn("_isl", island_id(value_col, max_gap, partition_cols))
     w_isl = Window.partitionBy(*part, F.col("_isl"))
     out = (
         out.withColumn(island_col, F.min(value_col).over(w_isl))
@@ -79,12 +82,7 @@ def island_ranges(
     total — HashPartitioning(partition_cols) from the break-window
     satisfies the agg's ClusteredDistribution(partition_cols, _isl)."""
     part = [F.col(c) for c in partition_cols]
-    w = Window.partitionBy(*part).orderBy(F.col(value_col))
-    gap_break: Column = F.when(
-        F.col(value_col) - F.lag(value_col).over(w) > max_gap, 1
-    ).otherwise(0)
-    w_cum = w.rowsBetween(Window.unboundedPreceding, 0)
-    tagged = df.withColumn("_isl", F.sum(gap_break).over(w_cum))
+    tagged = df.withColumn("_isl", island_id(value_col, max_gap, partition_cols))
     return (
         tagged.groupBy(*part, F.col("_isl"))
         .agg(

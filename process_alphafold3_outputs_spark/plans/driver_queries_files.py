@@ -241,20 +241,12 @@ def file_sink_report_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
 # O30 — predicate-filtered CIF sink ({job}_interaction.cif), re-read
 # ---------------------------------------------------------------------------
 def _partner_islands(spark: SparkSession, t: dict[str, DataFrame]) -> DataFrame:
-    from ..operators.islands import find_islands
-    from .pipeline import compute_contacts
+    from .pipeline import compute_contacts, partner_islands
 
     contacts = compute_contacts(
         t["predictions"], t["chains"], t["pae_long"], t["atoms"], PARAMS
     )
-    return find_islands(
-        contacts.select("job", "partner_res").distinct(),
-        ["job"],
-        "partner_res",
-        1,
-        3,
-        island_col="p_isl",
-    ).select("job", "partner_res")
+    return partner_islands(contacts).select("job", "partner_res")
 
 
 @register(

@@ -4,17 +4,24 @@ re-expressed as ONE DataFrame DAG over all jobs at once
 
 The per-job Python loop disappears into partitioning: every stage keys
 by ``job`` first, so the whole corpus processes as embarrassingly
-parallel partitions with exactly three shuffles (PAE threshold agg,
-island windows, contact grid join).
+parallel partitions. Each ingested table is read once and each
+intermediate is referenced once, except ``atoms`` (the contact join's
+two sides) and ``chains`` (the per-job bounds row, built twice because
+the PAE kernel and the report project different columns of it). At the
+reference defaults on a local session the executed plan has 5 shuffle
+exchanges: the chain-interval window (job), the PAE count aggregate
+(job, token), both sides of the contact grid join (job, cell), and the
+partner-island window (job), whose partitioning every later island
+window and aggregate reuses.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..operators.intervals import identify_interacting_residues
-from ..operators.islands import find_islands
+from ..operators.intervals import interacting_in_bounds, job_bounds
+from ..operators.islands import island_id
 from ..operators.screen import screen_binders
 from ..operators.spatial import contact_pairs_grid
 from ..params import (
@@ -26,6 +33,25 @@ from ..params import (
 )
 
 
+def partner_islands(contacts: DataFrame) -> DataFrame:
+    """Level 1 of O24 (process_af3_outputs.py:291-292): the contact rows
+    (job, partner_res, poi_res) of partner residues lying in an island of
+    the contact-map keys (gap <= 1, >= 3 distinct residues), tagged with
+    the island (``p_isl``) and its ``p_min``/``p_max``. One window
+    partitioned by ``job`` directly over the contact rows."""
+    tagged = contacts.withColumn(
+        "p_isl", island_id("partner_res", PARTNER_ISLAND_MAX_GAP, ["job"])
+    )
+    w = Window.partitionBy("job", "p_isl")
+    return (
+        tagged.withColumn("p_min", F.min("partner_res").over(w))
+        .withColumn("p_max", F.max("partner_res").over(w))
+        .withColumn("_n", F.size(F.collect_set("partner_res").over(w)))
+        .filter(F.col("_n") >= PARTNER_ISLAND_MIN_LENGTH)
+        .drop("_n")
+    )
+
+
 def two_level_islands(contacts: DataFrame) -> DataFrame:
     """O24 (process_af3_outputs.py:288-302): islands over contact-map keys
     (partner residues with >= 1 contact; gap<=1, len>=3), then — per
@@ -34,43 +60,25 @@ def two_level_islands(contacts: DataFrame) -> DataFrame:
 
     Returns one row per (partner island × POI island) pair:
       (job, p_min, p_max, c_min, c_max)
-    The second level partitions by a computed key (the first island's
-    min residue) — deterministic, so oracle hashing is stable
-    (SURVEY §7.2). The reference iterates a raw ``set`` here; we sort
-    (documented divergence-to-correctness, SURVEY §2.2 #7).
-    """
-    cmap_keys = contacts.select("job", "partner_res").distinct()
-    partner_islands = find_islands(
-        cmap_keys,
-        ["job"],
-        "partner_res",
-        PARTNER_ISLAND_MAX_GAP,
-        PARTNER_ISLAND_MIN_LENGTH,
-        island_col="p_isl",
+    The POI level is a second window over (job, p_isl) ordered by
+    ``poi_res`` — the set union is implicit, since a POI residue shared
+    by several partner residues repeats with gap 0 — then one aggregate
+    per island pair. ``HashPartitioning(job)`` from the partner window
+    satisfies both, so neither adds an exchange. The reference iterates
+    a raw ``set`` here; we sort (documented divergence-to-correctness,
+    SURVEY §2.2 #7)."""
+    poi = partner_islands(contacts).withColumn(
+        "c_isl", island_id("poi_res", POI_ISLAND_MAX_GAP, ["job", "p_isl"])
     )
-    p_ranges = partner_islands.groupBy("job", "p_isl").agg(
-        F.min("partner_res").alias("p_min"), F.max("partner_res").alias("p_max")
-    )
-    # Per-island set union of contact sets (:294-297) in long form.
-    poi_union = (
-        contacts.join(partner_islands, ["job", "partner_res"])
-        .select("job", "p_isl", "poi_res")
-        .distinct()
-    )
-    poi_islands = find_islands(
-        poi_union,
-        ["job", "p_isl"],
-        "poi_res",
-        POI_ISLAND_MAX_GAP,
-        POI_ISLAND_MIN_LENGTH,
-        island_col="c_isl",
-    )
-    c_ranges = poi_islands.groupBy("job", "p_isl", "c_isl").agg(
-        F.min("poi_res").alias("c_min"), F.max("poi_res").alias("c_max")
-    )
-    # O28 (:372-380): one row per (interacting island × contact island).
-    return c_ranges.join(p_ranges, ["job", "p_isl"]).select(
-        "job", "p_min", "p_max", "c_min", "c_max"
+    return (
+        poi.groupBy("job", "p_isl", "c_isl", "p_min", "p_max")
+        .agg(
+            F.min("poi_res").alias("c_min"),
+            F.max("poi_res").alias("c_max"),
+            F.countDistinct("poi_res").alias("_n"),
+        )
+        .filter(F.col("_n") >= POI_ISLAND_MIN_LENGTH)
+        .select("job", "p_min", "p_max", "c_min", "c_max")
     )
 
 
@@ -85,9 +93,11 @@ def compute_contacts(
     that need both the report AND the structure sinks compute (and
     cache) this ONCE — the reference recomputed the whole chain per
     output path (inefficiencies I1/I2)."""
-    binders = screen_binders(predictions, params)
-    interacting = identify_interacting_residues(pae_long, chains, params, jobs=binders)
-    return contact_pairs_grid(atoms, interacting, params)
+    binders = screen_binders(predictions, params).select("job")
+    screened = job_bounds(chains, params).join(binders, "job", "left_semi")
+    return contact_pairs_grid(
+        atoms, interacting_in_bounds(pae_long, screened, params), params
+    )
 
 
 def interaction_report(
@@ -107,26 +117,18 @@ def interaction_report(
     result, reused across report + sinks."""
     if contacts is None:
         contacts = compute_contacts(predictions, chains, pae_long, atoms, params)
-    pairs = two_level_islands(contacts)
-
-    poi_seq = chains.filter(F.col("chain_id") == params.poi_chain).select(
-        "job", F.col("sequence").alias("_poi_seq")
-    )
-    partner_seq = chains.filter(F.col("chain_id") == params.partner_chain).select(
-        "job", F.col("sequence").alias("_partner_seq")
-    )
     cols = params.report_columns()
     return (
-        pairs.join(poi_seq, "job")
-        .join(partner_seq, "job")
+        two_level_islands(contacts)
+        .join(job_bounds(chains, params).select("job", "poi_seq", "partner_seq"), "job")
         .select(
             F.col("job").alias(cols[0]),
             F.concat_ws("-", "c_min", "c_max").alias(cols[1]),
             # Spark substring is 1-based inclusive-length — exact match
             # for sequence[min-1:max] (:377).
-            F.expr("substring(_poi_seq, c_min, c_max - c_min + 1)").alias(cols[2]),
+            F.expr("substring(poi_seq, c_min, c_max - c_min + 1)").alias(cols[2]),
             F.concat_ws("-", "p_min", "p_max").alias(cols[3]),
-            F.expr("substring(_partner_seq, p_min, p_max - p_min + 1)").alias(cols[4]),
+            F.expr("substring(partner_seq, p_min, p_max - p_min + 1)").alias(cols[4]),
         )
     )
 

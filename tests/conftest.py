@@ -99,7 +99,13 @@ _ORACLE_PARAM = __import__("re").compile(
 )
 
 
+# Every collected test (file::name[id]), recorded before the `slow`
+# deselection so tests/test_slow_tier.py can check SLOW_TESTS against it.
+COLLECTED = pytest.StashKey[set]()
+
+
 def pytest_collection_modifyitems(config, items):
+    config.stash[COLLECTED] = {item.nodeid.split("/")[-1] for item in items}
     for item in items:
         short = item.nodeid.split("/")[-1]
         m = _ORACLE_PARAM.search(short)

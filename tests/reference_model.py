@@ -114,7 +114,7 @@ def report_rows(job, cmap, poi_seq, partner_seq) -> list[tuple]:
     return rows
 
 
-def full_pipeline(corpus: dict, poi=POI, partner=PARTNER) -> list[tuple]:
+def full_pipeline(corpus: dict, poi=POI, partner=PARTNER, min_residues=5) -> list[tuple]:
     """Expected report rows for a fixtures.make_corpus() dict."""
     preds = corpus["predictions"].to_dict("records")
     chains = corpus["chains"]
@@ -134,7 +134,8 @@ def full_pipeline(corpus: dict, poi=POI, partner=PARTNER) -> list[tuple]:
             for r in jp.itertuples()
         }
         inter = interacting_residues(
-            pae, n_tokens, chain_lengths, poi=poi, partner=partner
+            pae, n_tokens, chain_lengths, min_residues=min_residues,
+            poi=poi, partner=partner,
         )
         atoms = atoms_df[atoms_df.job == job].to_dict("records")
         cmap = contact_map(atoms, inter, poi=poi, partner=partner)

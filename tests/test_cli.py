@@ -4,8 +4,22 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from process_alphafold3_outputs_spark.cli import build_parser, run
 from process_alphafold3_outputs_spark.fixtures import write_file_corpus
+
+
+def _persisted(spark, corpus_dir: str) -> set:
+    """Persisted RDD ids, after materialising the summary reader's own
+    JSON-scan cache for ``corpus_dir`` (the reader keeps it; the CLI's
+    binders/contacts caches are what must not outlive a run)."""
+    from process_alphafold3_outputs_spark.sources.af3_json import (
+        read_summary_confidences,
+    )
+
+    read_summary_confidences(spark, corpus_dir).count()
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
 
 
 def test_cli_end_to_end(spark, tmp_path):
@@ -46,9 +60,31 @@ def test_cli_report_only(spark, tmp_path):
     args = build_parser().parse_args(
         ["-id", corpus_dir, "--output-dir", out_dir, "--skip-structures"]
     )
+    before = _persisted(spark, corpus_dir)
     result = run(args, spark=spark)
     assert result["interaction_cifs"] == 0
     assert os.path.exists(result["csv"])
+    assert _persisted(spark, corpus_dir) - before == set()  # borrowed session: no pins left
+
+
+def test_cli_releases_caches_when_a_sink_fails(spark, tmp_path, monkeypatch):
+    from process_alphafold3_outputs_spark.sources import af3_json
+
+    corpus_dir = str(tmp_path / "c2f")
+    write_file_corpus(corpus_dir, n_jobs=4, seed=3)
+    args = build_parser().parse_args(
+        ["-id", corpus_dir, "--output-dir", str(tmp_path / "o2f"), "--skip-structures"]
+    )
+
+    def failing_sink(*_a, **_k):
+        raise RuntimeError("sink failed")
+
+    # the PAE CSV sink runs after the report has materialised both caches
+    monkeypatch.setattr(af3_json, "write_pae_matrix_csvs", failing_sink)
+    before = _persisted(spark, corpus_dir)
+    with pytest.raises(RuntimeError, match="sink failed"):
+        run(args, spark=spark)
+    assert _persisted(spark, corpus_dir) - before == set()
 
 
 def test_cli_watch_once(spark, tmp_path):

@@ -2019,13 +2019,13 @@ def test_connected_components_lazy_ckpt_matches_eager(spark, monkeypatch):
     assert lazy[52] == 50 and lazy[61] == 60 and lazy[20] == 0
 
 
-def test_hot_probe_cache_returns_cached_verdict_and_invalidates(spark):
+def test_hot_probe_cache_returns_cached_verdict_and_invalidates(spark, sf_dir):
     """r15: has_hot_shingle memoizes its VERDICT per (plan, input files,
     params) — a plan-choice decision, never a query result. The cached
     verdict must equal a fresh recompute, and clear_hot_probe_cache()
     must force the recompute path."""
     sh = dedup.hashed_shingles(
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
     )
     dedup.clear_hot_probe_cache()
     v1 = dedup.has_hot_shingle(sh)
@@ -2044,12 +2044,12 @@ def test_hot_probe_cache_returns_cached_verdict_and_invalidates(spark):
     assert dedup._probe_key(mem, "hot_shingle", 20, 0.05) is None
 
 
-def test_kmeans_persisted_projection_matches_unpersisted(spark, monkeypatch):
+def test_kmeans_persisted_projection_matches_unpersisted(spark, sf_dir, monkeypatch):
     """r15: kmeans persists the (vec_id, vec) projection once and feeds
     every Lloyd pass from it; SPARK_GRAFT_NO_VEC_PERSIST=1 disables the
     persist (A/B hatch). Assignments must be identical, and the handles
     contract must hand back the persisted DataFrame for release."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     monkeypatch.delenv("SPARK_GRAFT_NO_VEC_PERSIST", raising=False)
     handles: list = []
     on = {

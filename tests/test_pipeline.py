@@ -98,6 +98,20 @@ def test_full_report_matches_model(af3, corpus):
     assert len(want) > 0
 
 
+def test_full_report_min_residues_zero_matches_model(af3, corpus):
+    """The vacuous-truth path (every in-range partner token qualifies)
+    end to end through contacts, islands and the sequence join."""
+    params = ScreenParams(min_residues_cutoff=0)
+    report = interaction_report(
+        af3["predictions"], af3["chains"], af3["pae_long"], af3["atoms"], params
+    )
+    cols = params.report_columns()
+    got = {tuple(r[c] for c in cols) for r in report.collect()}
+    want = set(model.full_pipeline(corpus, min_residues=0))
+    assert got == want
+    assert len(want) > 0
+
+
 def test_width_sources_agree_on_wellformed_corpus(af3):
     binders = screen_binders(af3["predictions"], PARAMS)
     from_pae = {

@@ -79,6 +79,48 @@ def test_default_width_source_scans_pae_once(spark, af3):
     assert default_plan.count("pae_long.parquet") == 1
 
 
+def _scans(plan: str, table: str) -> int:
+    # each scan node prints its Location exactly once in the details
+    return plan.count(f"{table}.parquet")
+
+
+def test_flagship_reads_each_table_once(spark, af3):
+    """The flagship is one flat DAG: every intermediate is referenced
+    once, so pae_long, predictions and the screened contacts are read
+    once; atoms twice (the contact join's two sides) and chains twice
+    (the per-job bounds row, pruned differently for the PAE kernel and
+    for the report's sequences). Shuffle exchanges: the interval
+    window, the PAE count aggregate, the two grid-join sides and the
+    partner-island window."""
+    import re
+
+    from process_alphafold3_outputs_spark.plans.pipeline import interaction_report
+    from process_alphafold3_outputs_spark.plans.sweep import (
+        sweep_grid,
+        sweep_interacting_residues,
+    )
+
+    plan = formatted_plan(
+        interaction_report(
+            af3["predictions"], af3["chains"], af3["pae_long"], af3["atoms"],
+            ScreenParams(),
+        )
+    )
+    assert _scans(plan, "pae_long") == 1
+    assert _scans(plan, "predictions") == 1
+    assert _scans(plan, "atoms") <= 2
+    assert _scans(plan, "chains") <= 2
+    assert len(re.findall(r"\(\d+\) Exchange", plan)) <= 5
+
+    sweep = formatted_plan(
+        sweep_interacting_residues(
+            af3["pae_long"], af3["chains"], sweep_grid([8.0, 15.0], [3, 5])
+        )
+    )
+    assert _scans(sweep, "chains") == 1
+    assert _scans(sweep, "pae_long") == 1
+
+
 def test_dim_joins_broadcast(spark, sf_dir):
     from process_alphafold3_outputs_spark.plans.driver_queries import (
         revenue_per_nation,

@@ -710,9 +710,8 @@ def _scale_probe_corpus(spark, sf_dir: str) -> dict:
 
     The pair-form (greedy exact-Jaccard) pipeline is quadratic per
     duplicate group by construction — r6 measured 7.2x-13.75x wall at
-    10x docs and the cause is structural (m²/2 pairs per m-dup group).
-    Its probe is off by default (SPARK_GRAFT_PROBE_PAIRFORM=1 re-runs
-    the contrast datapoint) so a loaded host can't starve the bench."""
+    10x docs and the cause is structural (m²/2 pairs per m-dup group),
+    so it is not probed: a loaded host can't starve the bench."""
     from process_alphafold3_outputs_spark.plans import corpus
 
     docs, big = _probe_docs_10x(spark, sf_dir)
@@ -750,24 +749,6 @@ def _scale_probe_corpus(spark, sf_dir: str) -> dict:
             big_out["wall_spread"][0] / max(base["wall_spread"][0], 1e-9), 2
         ),
     }
-    return out
-
-
-def _scale_probe_corpus_pairform(spark, sf_dir: str, base_median: float | None) -> dict:
-    """The pair-form contrast datapoint (greedy exact-Jaccard drop):
-    known superlinear on duplicate-heavy corpora; kept for on-demand
-    evidence behind SPARK_GRAFT_PROBE_PAIRFORM=1."""
-    from process_alphafold3_outputs_spark.plans import corpus
-
-    docs, big = _probe_docs_10x(spark, sf_dir)
-    n = docs.count()
-    out = _probed_wall(
-        spark, lambda: _noop_write(corpus.corpus_to_training(big))
-    )
-    out = {"mode": "greedy_pairform", "n_docs": n * 10, **out}
-    if base_median:
-        out["vs_1x_median"] = base_median
-        out["wall_ratio_10x_data"] = round(out["wall_sec"] / base_median, 2)
     return out
 
 
@@ -1541,15 +1522,6 @@ def main() -> None:
             scale_probe["corpus"] = {"error": f"{type(exc).__name__}: {exc}"}
             print(f"bench: corpus scale probe failed: "
                   f"{scale_probe['corpus']['error'][:200]}", file=sys.stderr)
-        if os.environ.get("SPARK_GRAFT_PROBE_PAIRFORM", "0") == "1":
-            try:
-                scale_probe["corpus_pairform"] = _scale_probe_corpus_pairform(
-                    spark, sf_dir, timings.get("pipeline_corpus_to_training")
-                )
-            except Exception as exc:  # noqa: BLE001
-                scale_probe["corpus_pairform"] = {
-                    "error": f"{type(exc).__name__}: {exc}"
-                }
         try:
             scale_probe["substrings"] = _scale_probe_substrings(spark, sf_dir)
         except Exception as exc:  # noqa: BLE001

@@ -884,6 +884,7 @@ def _result(
             k=args.clusters,
             iters=args.iters,
             train_sample_mod=args.train_sample_mod,
+            handles=handles,
         )
 
     if args.command == "semdedup":
@@ -1574,6 +1575,7 @@ def _result(
             min_words=args.min_words,
             max_words=args.max_words,
             jaccard_threshold=args.jaccard_threshold,
+            handles=handles,
         )
     if args.command == "c4":
         return text.c4_quality(
@@ -1602,6 +1604,7 @@ def _result(
             max_words=args.max_words,
             jaccard_threshold=args.jaccard_threshold,
             seed=args.seed,
+            handles=handles,
         )
     if args.command == "mix":
         budgets = {}
@@ -1683,6 +1686,7 @@ def _result(
             max_words=args.max_words,
             jaccard_threshold=args.jaccard_threshold,
             near_dedup=args.near_dedup,
+            handles=handles,
         )
     if args.command == "training":
         return corpus_plans.corpus_to_training(
@@ -1691,6 +1695,7 @@ def _result(
             chunk_tokens=args.chunk_tokens,
             overlap=args.overlap,
             val_pct=args.val_pct,
+            handles=handles,
         )
     if args.command == "pack":
         chunks = corpus_plans.corpus_to_training(
@@ -1699,6 +1704,7 @@ def _result(
             chunk_tokens=args.chunk_tokens,
             overlap=args.overlap,
             val_pct=args.val_pct,
+            handles=handles,
         )
         if args.policy == "bfd":
             return text.pack_sequences_bfd(chunks, seq_tokens=args.seq_tokens)

@@ -1500,8 +1500,7 @@ def connected_components(
     # recomputed — checkpointing edges and labels from the raw plan was
     # measured to re-run a Jaccard pair join three times.
     #
-    # Checkpoints here are LAZY (graph._ckpt; SPARK_GRAFT_EAGER_CKPT=1
-    # restores eager for paired A/Bs): each RDD still persists at its
+    # Checkpoints here are LAZY (graph._ckpt): each RDD still persists at its
     # FIRST materialization — the convergence count below provides the
     # materialization cadence — so the pair generator still runs once,
     # but setup + uncounted rounds no longer pay one blocking job

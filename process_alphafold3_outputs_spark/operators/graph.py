@@ -14,8 +14,6 @@ the textbook definition, not a leaky approximation.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -30,14 +28,11 @@ def _ckpt(df: DataFrame) -> DataFrame:
     chained RDD lineage instead of one blocking Spark job per round —
     the per-round job barrier was pure scheduling overhead (paired A/B
     in OPTIMIZATION_r14.md). Each round's RDD is still persisted on
-    first materialization, so nothing is recomputed. The eager form
-    (env ``SPARK_GRAFT_EAGER_CKPT=1``) exists for paired A/B probes —
-    and is the form to prefer the moment a loop gains a per-round
-    driver action (see ``dedup.connected_components``, whose per-round
-    convergence count forces materialization anyway)."""
-    return df.localCheckpoint(
-        eager=bool(os.environ.get("SPARK_GRAFT_EAGER_CKPT"))
-    )
+    first materialization, so nothing is recomputed. A loop with a
+    per-round driver action needs no eager form either: the action
+    itself materializes the round (see ``dedup.connected_components``,
+    whose per-round convergence count does exactly that)."""
+    return df.localCheckpoint(eager=False)
 
 
 def pagerank(

@@ -42,7 +42,6 @@ def find_islands(
     max_gap: int,
     min_length: int,
     island_col: str = "island_start",
-    keep_size: bool = False,
 ) -> DataFrame:
     """One row per kept (partition, value); ``island_col`` = min value of
     the island the row belongs to.
@@ -56,13 +55,12 @@ def find_islands(
     part = [F.col(c) for c in partition_cols]
     out = df.withColumn("_isl", island_id(value_col, max_gap, partition_cols))
     w_isl = Window.partitionBy(*part, F.col("_isl"))
-    out = (
+    return (
         out.withColumn(island_col, F.min(value_col).over(w_isl))
         .withColumn("_sz", F.count(F.lit(1)).over(w_isl))
         .filter(F.col("_sz") >= min_length)
+        .drop("_sz", "_isl")
     )
-    out = out if not keep_size else out.withColumnRenamed("_sz", "island_size")
-    return out.drop("_sz", "_isl", *([] if keep_size else []))
 
 
 def island_ranges(

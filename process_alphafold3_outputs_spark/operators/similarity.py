@@ -314,17 +314,6 @@ def _vec_proj(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def _persist_proj(df: DataFrame) -> DataFrame:
-    """persist() unless ``SPARK_GRAFT_NO_VEC_PERSIST`` is set — the
-    paired-A/B escape hatch for the shared-projection persist
-    (tools/ab_env.py)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_NO_VEC_PERSIST"):
-        return df
-    return df.persist()
-
-
 def ivf_centroids(
     embeddings: DataFrame, n_cells: int = 16, _proj: DataFrame | None = None
 ) -> DataFrame:
@@ -479,7 +468,7 @@ def kmeans(
     list to receive the persisted DataFrame and unpersist once the
     output has materialised; the bench/mirror harnesses release all
     pinned blocks between runs."""
-    emb = _persist_proj(_vec_proj(embeddings))
+    emb = _vec_proj(embeddings).persist()
     if handles is not None:
         handles.append(emb)
     cents = ivf_centroids(embeddings, k, _proj=emb)
@@ -536,7 +525,7 @@ def topk_ivf(
     slice (3 + refine_iters corpus scans shared into one — guide §5;
     value-exact, the arithmetic is untouched). ``handles``: caller-owned
     release, same contract as :func:`kmeans`."""
-    emb = _persist_proj(_vec_proj(embeddings))
+    emb = _vec_proj(embeddings).persist()
     if handles is not None:
         handles.append(emb)
     cents = ivf_centroids(embeddings, n_cells, _proj=emb)
@@ -915,7 +904,6 @@ def topk_ivfpq(
     m: int = 8,
     kc: int = 16,
     dim: int | None = None,
-    handles: list | None = None,
 ) -> DataFrame:
     """(query_id, neighbor_id, rk, sim) — IVF-PQ with RESIDUAL
     encoding (IVFADC, Jégou et al. 2011 §IV): the production ANN
@@ -946,9 +934,7 @@ def topk_ivfpq(
     :func:`ivfpq_search` (serve over a prebuilt index) — the
     build-once/serve-many split, same contract as
     ``ivf_search``/``watch_embeddings_ann``."""
-    cents, cb, codes = ivfpq_index(
-        embeddings, n_cells, m, kc, dim, handles=handles
-    )
+    cents, cb, codes = ivfpq_index(embeddings, n_cells, m, kc, dim)
     if isinstance(query_ids, Column):
         q = spread(embeddings, "vec_id").filter(query_ids)
     else:
@@ -964,7 +950,6 @@ def ivfpq_index(
     m: int = 8,
     kc: int = 16,
     dim: int | None = None,
-    handles: list | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(centroids, codebooks, codes) — the persistable IVF-PQ index
     build: centroids (cell, ccvec over NORMALIZED vectors), residual
@@ -973,8 +958,7 @@ def ivfpq_index(
     parquet (codes bucketed by cell) and serve with
     :func:`ivfpq_search`; the floats never travel again.
 
-    ``handles`` is accepted for API symmetry with :func:`kmeans` but
-    currently receives nothing: persisting the ``nrm``/``assigned``
+    Nothing is persisted: persisting the ``nrm``/``assigned``
     fan-out points was paired-A/B MEASURED A LOSS here (r15:
     topk_ivfpq 3.72 s persisted vs 2.83 s not, recall_ivfpq 3.07 vs
     2.80 — only 2-3 references each, the materialization barrier costs

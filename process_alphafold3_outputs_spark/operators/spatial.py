@@ -12,11 +12,11 @@ physical strategies, both pure-plan:
     axis the ±max_dist window spans at most 2 cells of pitch 2·d, the
     atom's own cell plus the one on the side of the cell midpoint the
     atom sits on); equi-join on (job, cx, cy, cz) — a plain hash join —
-    then the exact Euclidean filter. vs the classic edge-d/27-cell
-    scheme this shuffles 27/8 ≈ 3.4× fewer exploded partner rows at the
-    cost of a larger candidate volume per cell; the exact filter is
-    cheap JVM arithmetic, the shuffle is the scale bottleneck. Shuffle
-    keys lead with ``job`` so the join never mixes jobs.
+    then the exact Euclidean filter. Against the classic pitch-d,
+    27-cell explode this shuffles 27/8 ≈ 3.4× fewer exploded partner rows at the cost of a
+    larger candidate volume per cell (64·d³ vs 27·d³); the exact filter
+    is cheap JVM arithmetic, the shuffle is the scale bottleneck.
+    Shuffle keys lead with ``job`` so the join never mixes jobs.
 
 Distance semantics: radius-INCLUSIVE (dist <= max_dist), matching
 Biopython ``NeighborSearch.search`` (KD-tree "within radius" is
@@ -43,24 +43,13 @@ def contact_pairs_grid(
     interacting: DataFrame,
     params: ScreenParams,
     model_id: int = 0,
-    cell_scheme: str = "8",
 ) -> DataFrame:
     """Strategy (a). ``atoms``: (job, model_id, chain_id, residue_id, x, y, z);
     ``interacting``: (job, partner_res) from the PAE kernel.
 
     Join-key choice preserved from the reference (SURVEY §2.2 #8):
     ``partner_res`` (1-based token position) is compared against the
-    CIF author residue id (:231, :237).
-
-    ``cell_scheme``: ``"8"`` (default) = pitch 2·d, half-cell-quantized
-    2×2×2 explode — 3.4× fewer shuffled partner rows, larger candidate
-    volume per cell (64·d³ vs 27·d³). ``"27"`` = classic pitch-d,
-    ±1-cell explode. Both exact (identical output, differential-tested);
-    measured at bench scale the 8-cell shuffle savings win whenever the
-    shuffle — not the dist² filter — is the bottleneck, which is the
-    100 TB regime this engine targets."""
-    if cell_scheme == "27":
-        return _contact_pairs_grid27(atoms, interacting, params, model_id)
+    CIF author residue id (:231, :237)."""
     d = float(params.max_dist)
     cell = 2.0 * d  # half-cell quantization: pitch 2·d, 8-cell explode
     # Both sides keep only standard-AA residues (``is_aa(residue)``,
@@ -138,67 +127,6 @@ def contact_pairs_grid(
         (F.col("_cz") + F.col("_sz") * F.col("_o.oz")).alias("cz"),
     )
 
-    dist2 = (
-        (F.col("px") - F.col("x")) ** 2
-        + (F.col("py") - F.col("y")) ** 2
-        + (F.col("pz") - F.col("z")) ** 2
-    )
-    return (
-        partner_cells.join(poi, ["job", "cx", "cy", "cz"])
-        .filter(dist2 <= F.lit(d * d))  # radius-inclusive (NeighborSearch)
-        .select("job", "partner_res", "poi_res")
-        .distinct()
-    )
-
-
-def _contact_pairs_grid27(
-    atoms: DataFrame,
-    interacting: DataFrame,
-    params: ScreenParams,
-    model_id: int = 0,
-) -> DataFrame:
-    """Classic grid join: pitch d, partner exploded to its 27 neighbour
-    cells. Kept for A/B measurement and as the differential twin of the
-    8-cell scheme."""
-    d = float(params.max_dist)
-    base = atoms.filter((F.col("model_id") == model_id) & F.col("is_aa"))
-    poi = base.filter(F.col("chain_id") == params.poi_chain).select(
-        "job",
-        F.col("residue_id").alias("poi_res"),
-        "x",
-        "y",
-        "z",
-        F.floor(F.col("x") / d).cast("int").alias("cx"),
-        F.floor(F.col("y") / d).cast("int").alias("cy"),
-        F.floor(F.col("z") / d).cast("int").alias("cz"),
-    )
-    partner = (
-        base.filter(F.col("chain_id") == params.partner_chain)
-        .join(
-            interacting.select("job", F.col("partner_res").alias("residue_id")),
-            ["job", "residue_id"],
-            "left_semi",
-        )
-        .select("job", F.col("residue_id").alias("partner_res"), "x", "y", "z")
-    )
-    offsets = F.array(
-        *[
-            F.struct(F.lit(ox).alias("ox"), F.lit(oy).alias("oy"), F.lit(oz).alias("oz"))
-            for ox in (-1, 0, 1)
-            for oy in (-1, 0, 1)
-            for oz in (-1, 0, 1)
-        ]
-    )
-    partner_cells = partner.withColumn("_o", F.explode(offsets)).select(
-        "job",
-        "partner_res",
-        F.col("x").alias("px"),
-        F.col("y").alias("py"),
-        F.col("z").alias("pz"),
-        (F.floor(F.col("x") / d).cast("int") + F.col("_o.ox")).alias("cx"),
-        (F.floor(F.col("y") / d).cast("int") + F.col("_o.oy")).alias("cy"),
-        (F.floor(F.col("z") / d).cast("int") + F.col("_o.oz")).alias("cz"),
-    )
     dist2 = (
         (F.col("px") - F.col("x")) ** 2
         + (F.col("py") - F.col("y")) ** 2

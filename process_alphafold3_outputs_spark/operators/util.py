@@ -17,12 +17,8 @@ def spread(df: DataFrame, *key_cols: str) -> DataFrame:
     no gratuitous shuffle of the big table. (Deliberately NOT
     implemented via df.rdd.getNumPartitions(): materialising the RDD
     lineage defeats whole-stage codegen and costs more than it saves.)"""
-    import os
-
     spark = df.sparkSession
     if not spark.sparkContext.master.startswith("local"):
-        return df
-    if os.environ.get("SPARK_GRAFT_NO_SPREAD"):  # A/B probe escape hatch
         return df
     target = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     return df.repartition(target, *key_cols) if key_cols else df.repartition(target)

@@ -156,7 +156,6 @@ def clean_corpus(
     jaccard_threshold: float = 0.8,
     text_col: str = "text",
     stage: bool = True,
-    full_rows: bool = False,
     handles: list[DataFrame] | None = None,
     near_dedup: str = "auto",
     n_bands: int = 4,
@@ -166,9 +165,7 @@ def clean_corpus(
     _base: DataFrame | None = None,
 ) -> DataFrame:
     """Surviving documents after the four gates, with the stats the
-    gates used: (doc_id, pred_lang, n_words). ``full_rows=True`` keeps
-    every document column too (the downstream chunk/split stages need
-    the text — see :func:`corpus_to_training`).
+    gates used: (doc_id, pred_lang, n_words).
 
     ``near_dedup``: ``"auto"`` (default) probes the duplicate density of
     the post-gate, post-exact-dedup survivor population on a
@@ -227,21 +224,18 @@ def clean_corpus(
     materialises, or use :func:`staged_clean_corpus` /
     :func:`staged_corpus_to_training`, which do it on context exit.
 
-    ``project`` (internal narrow path — also what ``full_rows=False``
-    now routes through with ``project=["doc_id"]``): carry ONLY the
-    named payload columns plus (n_ws_tokens, pred_lang, _norm) through
-    the exact-dedup ``min_by`` struct, and run every near-dup kernel on
-    the already-computed ``_norm`` column instead of re-normalizing the
-    raw text. Both are pure physical savings: the min_by winner depends
-    only on doc_id, and ``normalized()`` is idempotent (lower/trim/
-    collapse of collapsed text is the identity — pytest-pinned), so the
-    shingle sets, band signatures and survivor set are bit-identical —
-    while the corpus-sized shuffle stops carrying the raw text plus
-    every metadata column it previously dragged along only to drop
-    (guide §2.3: project before the exchange), and downstream stages
-    (shingling, chunking) skip one full regexp re-normalization pass.
-    Returned columns on this path: ``project`` + (pred_lang, n_words,
-    _norm).
+    ``project`` (payload columns to carry; default ``["doc_id"]``):
+    only these plus (n_ws_tokens, pred_lang, _norm) ride the
+    exact-dedup ``min_by`` struct, and every near-dup kernel runs on
+    the already-computed ``_norm`` column. Both are value-exact: the
+    min_by winner depends only on doc_id, and ``normalized()`` is
+    idempotent (lower/trim/collapse of collapsed text is the identity —
+    pytest-pinned), so shingle sets, band signatures and the survivor
+    set equal those of the raw text, while the corpus-sized shuffle
+    carries no raw text or unused metadata (guide §2.3: project before
+    the exchange) and downstream stages (shingling, chunking) skip a
+    regexp re-normalization pass. With ``project`` given, the result
+    is ``project`` + (pred_lang, n_words, _norm).
 
     ``_base`` (internal — :func:`filter_audit`): a pre-built — typically
     persisted — UNFILTERED stats projection of the same ``docs``
@@ -280,18 +274,13 @@ def clean_corpus(
     # min_by hash agg, not a window: duplicates collapse map-side before
     # the hash-keyed shuffle (doc_id unique -> deterministic winner)
     explicit_project = project is not None
-    if full_rows and not explicit_project:
-        kernel_text = text_col
-        _kept_cols = [c for c in base.columns if c != "_norm"]
-    else:
-        if project is None:
-            project = ["doc_id"]
-        elif "doc_id" not in project:
-            project = ["doc_id", *project]
-        kernel_text = "_norm"
-        _kept_cols = list(
-            dict.fromkeys([*project, "n_ws_tokens", "pred_lang", "_norm"])
-        )
+    if project is None:
+        project = ["doc_id"]
+    elif "doc_id" not in project:
+        project = ["doc_id", *project]
+    _kept_cols = list(
+        dict.fromkeys([*project, "n_ws_tokens", "pred_lang", "_norm"])
+    )
     exact_kept = (
         base.groupBy(F.md5(F.col("_norm")).alias("_h"))
         .agg(F.min_by(F.struct(*_kept_cols), F.col("doc_id")).alias("_r"))
@@ -313,7 +302,7 @@ def clean_corpus(
         # fires two Spark jobs at plan-BUILD time; fully-lazy callers
         # pass an explicit mode.
         near_dedup = _resolve_near_dedup(
-            docs, n_bands, rows_per_band, kernel_text, probe_docs=exact_kept
+            docs, n_bands, rows_per_band, "_norm", probe_docs=exact_kept
         )
     if near_dedup == "minhash_bands":
         # banded path needs no shingle side-table — minhash builds its
@@ -322,7 +311,7 @@ def clean_corpus(
             exact_kept,
             n_bands=n_bands,
             rows_per_band=rows_per_band,
-            text_col=kernel_text,
+            text_col="_norm",
             # exact_kept is post-shuffle (and staged) — the default
             # local-mode spread would insert a redundant exchange
             spread_input=False,
@@ -347,7 +336,7 @@ def clean_corpus(
         # join + one pair agg + the size join — the jaccard_pairs
         # shuffle shape with a different threshold arithmetic.
         shingles = dedup.hashed_shingles(
-            exact_kept, text_col=kernel_text, spread_input=False
+            exact_kept, text_col="_norm", spread_input=False
         )
         if stage:
             shingles = shingles.persist()
@@ -362,7 +351,7 @@ def clean_corpus(
         qual = dedup.overlap_pairs(
             exact_kept,
             threshold=containment_threshold,
-            text_col=kernel_text,
+            text_col="_norm",
             prefix_filter=True,
             shingles=shingles,
         )
@@ -373,7 +362,7 @@ def clean_corpus(
         ).distinct()
     else:  # greedy | clusters (mode validated on entry)
         shingles = dedup.hashed_shingles(
-            exact_kept, text_col=kernel_text, spread_input=False
+            exact_kept, text_col="_norm", spread_input=False
         )
         if stage:
             shingles = shingles.persist()
@@ -386,7 +375,7 @@ def clean_corpus(
         near_pairs = dedup.jaccard_pairs(
             exact_kept,
             threshold=jaccard_threshold,
-            text_col=kernel_text,
+            text_col="_norm",
             prefix_filter=True,
             shingles=shingles,
         )
@@ -398,8 +387,6 @@ def clean_corpus(
         else:
             drop = near_pairs.select(F.col("doc_b").alias("doc_id")).distinct()
     survivors = exact_kept.join(drop, "doc_id", "left_anti")
-    if full_rows and not explicit_project:
-        return survivors.withColumn("n_words", F.col("n_ws_tokens"))
     if explicit_project:
         # internal narrow path: payload columns + stats + the normalized
         # text (callers chunk/count on _norm — normalize is idempotent)
@@ -651,12 +638,7 @@ def filter_audit(
     # the stats projection is the audit's fan-out point (flag columns,
     # keeper agg, and — via _base — the whole survivor pipeline); stage
     # it so the corpus parquet is scanned and normalized exactly once.
-    # SPARK_GRAFT_NO_BASE_SHARE=1 restores the independent-pass form
-    # (paired-A/B hatch, tools/ab_env.py).
-    import os as _os
-
-    _share = not _os.environ.get("SPARK_GRAFT_NO_BASE_SHARE")
-    if stage and _share:
+    if stage:
         base = base.persist()
         if handles is not None:
             handles.append(base)
@@ -674,7 +656,7 @@ def filter_audit(
             text_col=text_col,
             stage=stage,
             handles=handles,
-            _base=base if _share else None,
+            _base=base,
         )
         .select("doc_id")
         .withColumn("_kept", F.lit(1))
@@ -756,15 +738,12 @@ def token_report(
     the raw profile previously re-ran the full-corpus normalize pass
     beside the pipeline's own (r15, guide §2.4; same fix as
     :func:`filter_audit`)."""
-    import os as _os
-
-    _share = not _os.environ.get("SPARK_GRAFT_NO_BASE_SHARE")
     stats = (
         dedup.normalized(spread(docs, "doc_id"), text_col)
         .withColumn("n_ws_tokens", F.size(F.split("_norm", " ")).cast("long"))
         .withColumn("pred_lang", text.language_id_col(F.col("_norm")))
     )
-    if stage and _share:
+    if stage:
         stats = stats.persist()
         if handles is not None:
             handles.append(stats)
@@ -788,7 +767,7 @@ def token_report(
         stage=stage,
         handles=handles,
         project=["source"],
-        _base=stats if _share else None,
+        _base=stats,
     )
     kv = []
     for k, v in factors.items():

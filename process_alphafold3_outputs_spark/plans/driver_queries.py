@@ -20,7 +20,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.islands import find_islands
 from ..sources.tables import event_seconds, load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]

@@ -51,29 +51,20 @@ def _with_job(df: DataFrame) -> DataFrame:
     )
 
 
-#: hard cap on the driver-side corrupt-path collect (robust fallback).
+#: hard cap on the driver-side corrupt-path collect (encoding fallback).
 #: Corrupt files are rare by construction; if a pathological corpus
 #: exceeds this, the excess files simply stay dropped (the per-row
 #: contract) instead of ballooning driver memory.
 MAX_FALLBACK_FILES = 10_000
 
 
-def read_summary_confidences(
-    spark: SparkSession, input_dir: str, robust: bool = True
-) -> DataFrame:
-    """``predictions`` table from ``*_summary_confidences_0.json`` files.
-
-    Corrupt/undecodable JSON drops the row (reference returns False,
-    :70-80) rather than failing the query (SURVEY §2.2 #11).
-
-    ``robust=True`` adds the reference's encoding-fallback semantics
-    (:67-80 utf-8 → latin-1): files the JVM utf-8 parse rejected are
-    re-read ONCE via binaryFile + Python json with the fallback chain.
-    Corrupt files are rare by construction, so the fallback scan is a
-    handful of files — the driver-side path collect is bounded and does
-    not touch the happy path.
-    """
-    df = (
+def _summary_scan(spark: SparkSession, input_dir: str) -> DataFrame:
+    """The cached PERMISSIVE scan of every ``*_summary_confidences_0.json``
+    file, with its ``_path`` captured. Spark refuses
+    ``_corrupt_record``-only queries on an uncached JSON scan; summary
+    docs are ~100 B/job, so caching the screen input is cheap even at
+    full-corpus scale."""
+    return (
         spark.read.schema(SUMMARY_SCHEMA)
         .option("multiLine", "true")
         .option("mode", "PERMISSIVE")
@@ -83,12 +74,24 @@ def read_summary_confidences(
         .json(input_dir)
         .withColumn("_path", F.input_file_name())
         .filter(~F.col("_path").rlike(r"/\._"))  # AppleDouble junk (O2/O3)
+        .cache()
     )
-    if robust:
-        # Spark refuses _corrupt_record-only queries on an uncached JSON
-        # scan; summary docs are ~100 B/job, so caching the screen input
-        # is cheap even at full-corpus scale.
-        df = df.cache()
+
+
+def read_summary_confidences(spark: SparkSession, input_dir: str) -> DataFrame:
+    """``predictions`` table from ``*_summary_confidences_0.json`` files.
+
+    Corrupt/undecodable JSON drops the row (reference returns False,
+    :70-80) rather than failing the query (SURVEY §2.2 #11).
+
+    The reference's encoding fallback (:67-80 utf-8 → latin-1) is
+    applied: files the JVM utf-8 parse rejected are re-read ONCE via
+    binaryFile + Python json with the fallback chain. Corrupt files are
+    rare by construction, so the fallback scan is a handful of files —
+    the driver-side path collect is bounded and does not touch the
+    happy path.
+    """
+    df = _summary_scan(spark, input_dir)
     # job from the captured _path column — input_file_name() evaluates
     # empty once rows come from cache instead of the file scan.
     ok = (
@@ -96,8 +99,6 @@ def read_summary_confidences(
         .withColumn("job", F.regexp_extract(F.col("_path"), _JOB_FROM_PATH, 1))
         .select("job", "iptm", "ptm", "chain_pair_pae_min")
     )
-    if not robust:
-        return ok
     bad_paths = [
         r["_path"]
         for r in df.filter(F.col("_corrupt_record").isNotNull())
@@ -258,19 +259,11 @@ def read_summary_errors(spark: SparkSession, input_dir: str) -> DataFrame:
     JSON parse rejected — (path, raw_prefix). A distributed engine
     cannot grep a driver log; the errors ARE a queryable side output
     (SURVEY §2 O35: 'per-row error tracking as an errors DataFrame')."""
-    df = (
-        spark.read.schema(SUMMARY_SCHEMA)
-        .option("multiLine", "true")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*_summary_confidences_0.json")
-        .json(input_dir)
-        .withColumn("_path", F.input_file_name())
-        .filter(~F.col("_path").rlike(r"/\._"))
-        .cache()
-    )
-    return df.filter(F.col("_corrupt_record").isNotNull()).select(
-        F.col("_path").alias("path"),
-        F.substring("_corrupt_record", 1, 80).alias("raw_prefix"),
+    return (
+        _summary_scan(spark, input_dir)
+        .filter(F.col("_corrupt_record").isNotNull())
+        .select(
+            F.col("_path").alias("path"),
+            F.substring("_corrupt_record", 1, 80).alias("raw_prefix"),
+        )
     )

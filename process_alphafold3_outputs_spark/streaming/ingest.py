@@ -828,21 +828,15 @@ def watch_embeddings_ivfpq(
             "sub int, code int, cvec array<double>",
             before_epoch=epoch_id,
         )
-        handles: list = []
         if not cents.head(1):  # first committed epoch: bootstrap-train
             cents, cb, codes = ivfpq_index(
-                batch_df, n_cells=n_cells, m=m, kc=kc, dim=dim,
-                handles=handles,
+                batch_df, n_cells=n_cells, m=m, kc=kc, dim=dim
             )
         else:
             codes = ivfpq_encode(batch_df, cents, cb, m=m, dim=dim)
         _write_epoch_output(codes, codes_path, epoch_id)
         roll_state(cents, centroids_path, epoch_id)
         roll_state(cb, codebooks_path, epoch_id)
-        # the bootstrap's shared-projection persists must not outlive
-        # the batch (a long-running stream would pin them forever)
-        for h in handles:
-            h.unpersist()
 
     return (
         stream.writeStream.foreachBatch(process_batch)

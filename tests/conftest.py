@@ -79,7 +79,6 @@ SLOW_TESTS = {
     "test_multimodal_streaming.py::test_session_stream_drops_late_data_past_watermark",  # 8.5s
     "test_multimodal_streaming.py::test_state_table_stays_compact_over_many_epochs",  # 17.7s
     "test_multimodal_streaming.py::test_watch_documents_doremi_matches_batch",  # 8.3s
-    "test_randomized_differential.py::test_grid_schemes_match_numpy_on_boundary_heavy_clouds",  # 8.0s
     "test_randomized_differential.py::test_jaccard_prefix_filter_lossless_on_adversarial_docs",  # 9.2s
     "test_randomized_differential.py::test_stars_cc_matches_pointer_doubling_random_graphs",  # 23.5s
     "test_round10_properties.py::test_ks_matches_bruteforce_cdf_sweep",  # 14.6s

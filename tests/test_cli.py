@@ -87,6 +87,34 @@ def test_cli_releases_caches_when_a_sink_fails(spark, tmp_path, monkeypatch):
     assert _persisted(spark, corpus_dir) - before == set()
 
 
+def test_corpus_cli_releases_staged_blocks(spark, tmp_path, sf_dir):
+    """``run`` releases what the corpus pipelines staged: two training
+    runs over different input files, then an audit and a token report,
+    on one borrowed session leave no persisted RDD behind."""
+    from pyspark.sql import functions as F
+
+    from process_alphafold3_outputs_spark import corpus_cli
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    paths = [str(tmp_path / f"docs{i}.parquet") for i in range(2)]
+    for i, path in enumerate(paths):
+        docs.filter(F.col("doc_id") % 2 == i).write.parquet(path)
+    commands = [
+        ["training", "--documents", paths[0]],
+        ["training", "--documents", paths[1]],
+        ["audit", "--documents", paths[1]],
+        ["report-tokens", "--documents", paths[1], "--factor", "src1=2.0"],
+    ]
+    jrdds = spark.sparkContext._jsc
+    before = set(jrdds.getPersistentRDDs().keySet().toArray())
+    for i, cmd in enumerate(commands):
+        args = corpus_cli.build_parser().parse_args(
+            [*cmd, "--out", str(tmp_path / f"out{i}")]
+        )
+        assert corpus_cli.run(args, spark=spark)["rows"] > 0
+    assert set(jrdds.getPersistentRDDs().keySet().toArray()) - before == set()
+
+
 def test_cli_watch_once(spark, tmp_path):
     corpus_dir = str(tmp_path / "c3")
     out_dir = str(tmp_path / "o3")
@@ -243,7 +271,7 @@ def test_cli_distributed_csv_sink(spark, tmp_path):
 # --------------------------------------------------------------------------
 
 
-def test_corpus_cli_commands_roundtrip(spark, tmp_path):
+def test_corpus_cli_commands_roundtrip(spark, tmp_path, sf_dir):
     """Each corpus_cli command writes parquet whose rows equal the
     library operator's own output — the CLI is a pure shell."""
     from pyspark.sql import functions as F
@@ -251,9 +279,8 @@ def test_corpus_cli_commands_roundtrip(spark, tmp_path):
     from process_alphafold3_outputs_spark import corpus_cli
     from process_alphafold3_outputs_spark.operators import dedup, text
 
-    sf = "/root/testdata/sf0.001"
-    docs_path = f"{sf}/documents.parquet"
-    emb_path = f"{sf}/embeddings.parquet"
+    docs_path = f"{sf_dir}/documents.parquet"
+    emb_path = f"{sf_dir}/embeddings.parquet"
     docs = spark.read.parquet(docs_path)
 
     def run_cmd(argv):
@@ -301,14 +328,13 @@ def test_corpus_cli_commands_roundtrip(spark, tmp_path):
     assert res["rows"] > 0 and "seq_id" in got.columns
 
 
-def test_corpus_cli_new_commands_roundtrip(spark, tmp_path):
+def test_corpus_cli_new_commands_roundtrip(spark, tmp_path, sf_dir):
     """classify / mix / dedup-incremental are pure shells over the
     tested operators, like the original eight commands."""
     from process_alphafold3_outputs_spark import corpus_cli
     from process_alphafold3_outputs_spark.operators import dedup, text
 
-    sf = "/root/testdata/sf0.001"
-    docs_path = f"{sf}/documents.parquet"
+    docs_path = f"{sf_dir}/documents.parquet"
     docs = spark.read.parquet(docs_path)
 
     def run_cmd(argv):
@@ -343,15 +369,14 @@ def test_corpus_cli_new_commands_roundtrip(spark, tmp_path):
     assert rolled.count() == dedup.exact_dedup(docs).count()
 
 
-def test_corpus_cli_pack_bfd_policy(spark, tmp_path):
+def test_corpus_cli_pack_bfd_policy(spark, tmp_path, sf_dir):
     from pyspark.sql import functions as F
 
     from process_alphafold3_outputs_spark import corpus_cli
 
-    sf = "/root/testdata/sf0.001"
     out = str(tmp_path / "packed_bfd")
     args = corpus_cli.build_parser().parse_args(
-        ["pack", "--documents", f"{sf}/documents.parquet", "--chunk-tokens",
+        ["pack", "--documents", f"{sf_dir}/documents.parquet", "--chunk-tokens",
          "32", "--overlap", "8", "--seq-tokens", "64", "--policy", "bfd",
          "--out", out]
     )
@@ -363,12 +388,11 @@ def test_corpus_cli_pack_bfd_policy(spark, tmp_path):
     assert got.filter(F.col("seq_offset") + F.col("n_tokens") > 64).count() == 0
 
 
-def test_corpus_cli_semdedup_and_perplexity(spark, tmp_path):
+def test_corpus_cli_semdedup_and_perplexity(spark, tmp_path, sf_dir):
     from process_alphafold3_outputs_spark import corpus_cli
 
-    sf = "/root/testdata/sf0.001"
-    docs_path = f"{sf}/documents.parquet"
-    emb_path = f"{sf}/embeddings.parquet"
+    docs_path = f"{sf_dir}/documents.parquet"
+    emb_path = f"{sf_dir}/embeddings.parquet"
 
     def run_cmd(argv):
         args = corpus_cli.build_parser().parse_args(argv)
@@ -392,19 +416,18 @@ def test_corpus_cli_semdedup_and_perplexity(spark, tmp_path):
     assert set(got.columns) == {"doc_id", "n_bigrams", "avg_nll", "ppl"}
 
 
-def test_corpus_cli_interleave_writes_ordered_shards(spark, tmp_path):
+def test_corpus_cli_interleave_writes_ordered_shards(spark, tmp_path, sf_dir):
     import glob as _glob
 
     from process_alphafold3_outputs_spark import corpus_cli
 
-    sf = "/root/testdata/sf0.001"
     out = str(tmp_path / "interleaved")
     args = corpus_cli.build_parser().parse_args(
-        ["interleave", "--documents", f"{sf}/documents.parquet", "--out", out,
+        ["interleave", "--documents", f"{sf_dir}/documents.parquet", "--out", out,
          "--weight", "src0=4", "--shards", "4"]
     )
     res = corpus_cli.run(args, spark)
-    assert res["rows"] == spark.read.parquet(f"{sf}/documents.parquet").count()
+    assert res["rows"] == spark.read.parquet(f"{sf_dir}/documents.parquet").count()
     files = sorted(_glob.glob(out + "/part-*.parquet"))
     ranges = []
     for f in files:
@@ -416,18 +439,17 @@ def test_corpus_cli_interleave_writes_ordered_shards(spark, tmp_path):
         assert hi1 <= lo2
 
 
-def test_corpus_cli_curate(spark, tmp_path):
+def test_corpus_cli_curate(spark, tmp_path, sf_dir):
     from process_alphafold3_outputs_spark import corpus_cli
     from process_alphafold3_outputs_spark.plans.corpus import curate_corpus
 
-    sf = "/root/testdata/sf0.001"
     out = str(tmp_path / "curated")
     args = corpus_cli.build_parser().parse_args(
-        ["curate", "--documents", f"{sf}/documents.parquet", "--out", out,
+        ["curate", "--documents", f"{sf_dir}/documents.parquet", "--out", out,
          "--max-avg-nll", "99"]
     )
     res = corpus_cli.run(args, spark)
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     want = curate_corpus(docs, max_avg_nll=99.0).count()
     assert res["rows"] == want > 0
 
@@ -519,7 +541,7 @@ def test_corpus_cli_entities_bpe_ann(spark, tmp_path):
     assert res["rows"] == 60  # 20 queries x k=3
 
 
-def test_corpus_cli_dsir_and_banded_clean(spark, tmp_path):
+def test_corpus_cli_dsir_and_banded_clean(spark, tmp_path, sf_dir):
     """r7 commands: dsir weights/sample and clean --near-dedup
     minhash_bands are pure shells over the tested operators."""
     from pyspark.sql import functions as F
@@ -528,8 +550,7 @@ def test_corpus_cli_dsir_and_banded_clean(spark, tmp_path):
     from process_alphafold3_outputs_spark.operators import text
     from process_alphafold3_outputs_spark.plans import corpus as corpus_plans
 
-    sf = "/root/testdata/sf0.001"
-    docs_path = f"{sf}/documents.parquet"
+    docs_path = f"{sf_dir}/documents.parquet"
     docs = spark.read.parquet(docs_path)
     target_path = str(tmp_path / "target")
     docs.filter(F.col("lang") == "en").write.parquet(target_path)
@@ -579,14 +600,13 @@ def test_corpus_cli_dsir_and_banded_clean(spark, tmp_path):
                                 "n_occurrences"}
 
 
-def test_corpus_cli_ann_pq_index_and_query(spark, tmp_path):
+def test_corpus_cli_ann_pq_index_and_query(spark, tmp_path, sf_dir):
     from pyspark.sql import functions as F
 
     from process_alphafold3_outputs_spark import corpus_cli
     from process_alphafold3_outputs_spark.operators import similarity
 
-    sf = "/root/testdata/sf0.001"
-    emb_path = f"{sf}/embeddings.parquet"
+    emb_path = f"{sf_dir}/embeddings.parquet"
     emb = spark.read.parquet(emb_path)
 
     def run_cmd(argv):
@@ -616,12 +636,11 @@ def test_corpus_cli_ann_pq_index_and_query(spark, tmp_path):
     assert got == {tuple(r) for r in want.collect()} and res["rows"] > 0
 
 
-def test_corpus_cli_dedup_substrings(spark, tmp_path):
+def test_corpus_cli_dedup_substrings(spark, tmp_path, sf_dir):
     from process_alphafold3_outputs_spark import corpus_cli
     from process_alphafold3_outputs_spark.operators import dedup
 
-    sf = "/root/testdata/sf0.001"
-    docs_path = f"{sf}/documents.parquet"
+    docs_path = f"{sf_dir}/documents.parquet"
     docs = spark.read.parquet(docs_path)
     out = str(tmp_path / "substr")
     args = corpus_cli.build_parser().parse_args(
@@ -642,7 +661,7 @@ def test_corpus_cli_dedup_substrings(spark, tmp_path):
     )
 
 
-def test_corpus_cli_curation_round7_commands(spark, tmp_path):
+def test_corpus_cli_curation_round7_commands(spark, tmp_path, sf_dir):
     """train-classifier / classify --weights / audit / c4 / ccnet /
     epochs are pure shells over the tested operators; the trained
     model round-trips through parquet into the scoring gate with its
@@ -650,8 +669,7 @@ def test_corpus_cli_curation_round7_commands(spark, tmp_path):
     from process_alphafold3_outputs_spark import corpus_cli
     from process_alphafold3_outputs_spark.operators import text as text_ops
 
-    sf = "/root/testdata/sf0.001"
-    docs_path = f"{sf}/documents.parquet"
+    docs_path = f"{sf_dir}/documents.parquet"
     docs = spark.read.parquet(docs_path)
     n = docs.count()
 
@@ -714,13 +732,12 @@ def test_corpus_cli_curation_round7_commands(spark, tmp_path):
     assert res["rows"] == exp > 0
 
 
-def test_corpus_cli_report_tokens(spark, tmp_path):
+def test_corpus_cli_report_tokens(spark, tmp_path, sf_dir):
     from process_alphafold3_outputs_spark import corpus_cli
 
-    sf = "/root/testdata/sf0.001"
     out = str(tmp_path / "ledger")
     args = corpus_cli.build_parser().parse_args(
-        ["report-tokens", "--documents", f"{sf}/documents.parquet",
+        ["report-tokens", "--documents", f"{sf_dir}/documents.parquet",
          "--factor", "src0=2.0", "--factor", "src1=0.5", "--out", out]
     )
     res = corpus_cli.run(args, spark)
@@ -730,13 +747,12 @@ def test_corpus_cli_report_tokens(spark, tmp_path):
     assert {"source", "raw_tokens", "clean_tokens", "train_tokens"} <= cols
 
 
-def test_corpus_cli_round8_commands(spark, tmp_path):
+def test_corpus_cli_round8_commands(spark, tmp_path, sf_dir):
     """Roundtrip the round-8 CLI surface: containment dedup,
     script-profile, crawl diff, hybrid search."""
     from process_alphafold3_outputs_spark import corpus_cli
 
-    sf = "/root/testdata/sf0.001"
-    docs = f"{sf}/documents.parquet"
+    docs = f"{sf_dir}/documents.parquet"
 
     out = str(tmp_path / "cont")
     args = corpus_cli.build_parser().parse_args(
@@ -770,7 +786,7 @@ def test_corpus_cli_round8_commands(spark, tmp_path):
     out = str(tmp_path / "hyb")
     args = corpus_cli.build_parser().parse_args(
         ["search", "--documents", docs,
-         "--embeddings", f"{sf}/embeddings.parquet",
+         "--embeddings", f"{sf_dir}/embeddings.parquet",
          "--terms", "spark,query", "--query-vec-id", "3", "--out", out]
     )
     res = corpus_cli.run(args, spark)
@@ -779,12 +795,12 @@ def test_corpus_cli_round8_commands(spark, tmp_path):
     assert {"doc_id", "rrf_score", "rk"} <= set(got.columns)
 
 
-def test_corpus_cli_mix_doremi_roundtrip(spark, tmp_path):
+def test_corpus_cli_mix_doremi_roundtrip(spark, tmp_path, sf_dir):
     """Roundtrip the mix-doremi CLI: weight-table form and the
     budget-draw form (drawn rows respect their domain budgets)."""
     from process_alphafold3_outputs_spark import corpus_cli
 
-    docs = "/root/testdata/sf0.001/documents.parquet"
+    docs = f"{sf_dir}/documents.parquet"
 
     out = str(tmp_path / "drmw")
     args = corpus_cli.build_parser().parse_args(
@@ -806,14 +822,14 @@ def test_corpus_cli_mix_doremi_roundtrip(spark, tmp_path):
     assert (got.cum_tokens <= got.budget).all()
 
 
-def test_corpus_cli_compare_roundtrip(spark, tmp_path):
+def test_corpus_cli_compare_roundtrip(spark, tmp_path, sf_dir):
     """Roundtrip the compare CLI (Fightin'-Words log-odds): lang-group
     form works, and asking for zero or two groups is rejected."""
     import pytest
 
     from process_alphafold3_outputs_spark import corpus_cli
 
-    docs = "/root/testdata/sf0.001/documents.parquet"
+    docs = f"{sf_dir}/documents.parquet"
     out = str(tmp_path / "cmp")
     args = corpus_cli.build_parser().parse_args(
         ["compare", "--documents", docs, "--group-lang", "en", "--out", out]
@@ -830,11 +846,11 @@ def test_corpus_cli_compare_roundtrip(spark, tmp_path):
         corpus_cli.run(bad, spark)
 
 
-def test_corpus_cli_langs_roundtrip(spark, tmp_path):
+def test_corpus_cli_langs_roundtrip(spark, tmp_path, sf_dir):
     """Roundtrip the langs CLI: profile form and segment-split form."""
     from process_alphafold3_outputs_spark import corpus_cli
 
-    docs = "/root/testdata/sf0.001/documents.parquet"
+    docs = f"{sf_dir}/documents.parquet"
 
     out = str(tmp_path / "prof")
     args = corpus_cli.build_parser().parse_args(
@@ -855,14 +871,14 @@ def test_corpus_cli_langs_roundtrip(spark, tmp_path):
     assert {"seg_id", "lang", "seg_text"} <= set(got.columns)
 
 
-def test_corpus_cli_expect_roundtrip(spark, tmp_path):
+def test_corpus_cli_expect_roundtrip(spark, tmp_path, sf_dir):
     """Roundtrip the expect CLI: flag-built rules produce one report
     row each; zero rules is rejected."""
     import pytest
 
     from process_alphafold3_outputs_spark import corpus_cli
 
-    orders = "/root/testdata/sf0.001/orders.parquet"
+    orders = f"{sf_dir}/orders.parquet"
     out = str(tmp_path / "exp")
     args = corpus_cli.build_parser().parse_args(
         ["expect", "--input", orders, "--unique", "o_orderkey",
@@ -884,12 +900,12 @@ def test_corpus_cli_expect_roundtrip(spark, tmp_path):
         corpus_cli.run(bad, spark)
 
 
-def test_corpus_cli_privacy_roundtrip(spark, tmp_path):
+def test_corpus_cli_privacy_roundtrip(spark, tmp_path, sf_dir):
     """Roundtrip the privacy CLI: violation-groups mode, l-diversity
     mode, and the one-row --report mode over the same table."""
     from process_alphafold3_outputs_spark import corpus_cli
 
-    cust = "/root/testdata/sf0.001/customer.parquet"
+    cust = f"{sf_dir}/customer.parquet"
 
     def run(extra, out_name):
         out = str(tmp_path / out_name)
@@ -915,28 +931,27 @@ def test_corpus_cli_privacy_roundtrip(spark, tmp_path):
     assert r.n_rows_at_risk <= r.n_rows
 
 
-def test_corpus_cli_join_size_roundtrip(spark, tmp_path):
+def test_corpus_cli_join_size_roundtrip(spark, tmp_path, sf_dir):
     """Roundtrip the join-size CLI: one-row estimate table, estimate
     bounded below by the exact join size."""
     from pyspark.sql import functions as F
 
     from process_alphafold3_outputs_spark import corpus_cli
 
-    sf = "/root/testdata/sf0.001"
     out = str(tmp_path / "jsz")
     args = corpus_cli.build_parser().parse_args(
-        ["join-size", "--left", f"{sf}/orders.parquet",
+        ["join-size", "--left", f"{sf_dir}/orders.parquet",
          "--left-key", "o_orderkey",
-         "--right", f"{sf}/lineitem.parquet", "--right-key", "l_orderkey",
+         "--right", f"{sf_dir}/lineitem.parquet", "--right-key", "l_orderkey",
          "--width", "8192", "--out", out]
     )
     res = corpus_cli.run(args, spark)
     got = spark.read.parquet(out).collect()
     assert res["rows"] == len(got) == 1
     exact = (
-        spark.read.parquet(f"{sf}/orders.parquet")
+        spark.read.parquet(f"{sf_dir}/orders.parquet")
         .join(
-            spark.read.parquet(f"{sf}/lineitem.parquet"),
+            spark.read.parquet(f"{sf_dir}/lineitem.parquet"),
             F.col("o_orderkey") == F.col("l_orderkey"),
         )
         .count()
@@ -944,13 +959,13 @@ def test_corpus_cli_join_size_roundtrip(spark, tmp_path):
     assert got[0].est_join_size >= exact
 
 
-def test_corpus_cli_vocab_overlap_roundtrip(spark, tmp_path):
+def test_corpus_cli_vocab_overlap_roundtrip(spark, tmp_path, sf_dir):
     """Roundtrip the vocab-overlap CLI: comparing a corpus with itself
     estimates full overlap (est_union == est_a == est_b, overlap ==
     either side up to the 3-dp round)."""
     from process_alphafold3_outputs_spark import corpus_cli
 
-    docs = "/root/testdata/sf0.001/documents.parquet"
+    docs = f"{sf_dir}/documents.parquet"
     out = str(tmp_path / "vov")
     args = corpus_cli.build_parser().parse_args(
         ["vocab-overlap", "--left", docs, "--right", docs, "--out", out]

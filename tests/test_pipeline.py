@@ -281,24 +281,6 @@ def test_contact_distance_is_radius_inclusive(spark):
     assert grid == brute == {(2, 1)}
 
 
-def test_grid_cell_schemes_agree(af3):
-    """8-cell (pitch 2d, half-quantized) and 27-cell (pitch d) grid
-    joins are exact twins — differential over the fixture corpus."""
-    binders = screen_binders(af3["predictions"], PARAMS)
-    inter = identify_interacting_residues(
-        af3["pae_long"], af3["chains"], PARAMS, jobs=binders
-    )
-    g8 = {
-        (r.job, r.partner_res, r.poi_res)
-        for r in contact_pairs_grid(af3["atoms"], inter, PARAMS, cell_scheme="8").collect()
-    }
-    g27 = {
-        (r.job, r.partner_res, r.poi_res)
-        for r in contact_pairs_grid(af3["atoms"], inter, PARAMS, cell_scheme="27").collect()
-    }
-    assert g8 == g27 and len(g8) > 0
-
-
 def test_full_report_matches_model_alternate_seed(spark, tmp_path):
     """Same end-to-end differential on a DIFFERENT corpus seed and size
     — guards against expectations that only hold for the module fixture

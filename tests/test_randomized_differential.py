@@ -22,41 +22,41 @@ def _random_atoms(seed: int, n_per_chain: int = 60):
     """Coordinates snapped to multiples of d/2 = 4.0 — every pair
     distance is a multiple-of-16 sum of squares, maximising exact
     cell-border and radius-boundary hits (the half-cell proof's edge
-    cases)."""
+    cases). One job per seed."""
     rng = random.Random(seed)
     rows = []
     for chain, n in (("A", n_per_chain), ("B", n_per_chain)):
         for r in range(1, n + 1):
             x, y, z = (rng.randint(0, 8) * 4.0 for _ in range(3))
-            rows.append(("j", 0, chain, r, "GLY", True, "CA", x, y, z))
+            rows.append((f"j{seed}", 0, chain, r, "GLY", True, "CA", x, y, z))
     return rows
 
 
-def test_grid_schemes_match_numpy_on_boundary_heavy_clouds(spark):
+def test_grid_matches_numpy_on_boundary_heavy_clouds(spark):
     schema = (
         "job string, model_id int, chain_id string, residue_id int, "
         "residue_name string, is_aa boolean, atom_name string, "
         "x double, y double, z double"
     )
-    for seed in (3, 17, 92):
-        atoms = spark.createDataFrame(_random_atoms(seed), schema)
-        inter = spark.createDataFrame(
-            [("j", r) for r in range(1, 61)], "job string, partner_res int"
-        )
-        sets = {}
-        for scheme in ("8", "27"):
-            sets[scheme] = {
-                (r.partner_res, r.poi_res)
-                for r in contact_pairs_grid(
-                    atoms, inter, PARAMS, cell_scheme=scheme
-                ).collect()
-            }
-        brute = {
-            (r.partner_res, r.poi_res)
-            for r in contact_pairs_numpy(atoms, inter, PARAMS).collect()
-        }
-        assert sets["8"] == sets["27"] == brute, seed
-        assert len(brute) > 0, seed  # snapped coords guarantee contacts
+    seeds = (3, 17, 92)
+    atoms = spark.createDataFrame(
+        [row for seed in seeds for row in _random_atoms(seed)], schema
+    )
+    inter = spark.createDataFrame(
+        [(f"j{seed}", r) for seed in seeds for r in range(1, 61)],
+        "job string, partner_res int",
+    )
+    grid = {
+        (r.job, r.partner_res, r.poi_res)
+        for r in contact_pairs_grid(atoms, inter, PARAMS).collect()
+    }
+    brute = {
+        (r.job, r.partner_res, r.poi_res)
+        for r in contact_pairs_numpy(atoms, inter, PARAMS).collect()
+    }
+    assert grid == brute
+    # snapped coords guarantee contacts in every cloud
+    assert {job for job, _, _ in brute} == {f"j{seed}" for seed in seeds}
 
 
 def _random_docs(seed: int, n: int = 40):

@@ -697,6 +697,27 @@ def _probe_docs_10x(spark, sf_dir: str):
     return docs, big
 
 
+def _resolved_near_dedup(build):
+    """Build a corpus plan with ``build`` and return it together with the
+    near-dup mode its ``near_dedup="auto"`` gate resolved (None when the
+    plan has no auto gate)."""
+    from process_alphafold3_outputs_spark.plans import corpus
+
+    seen = []
+    gate = corpus._resolve_near_dedup
+
+    def spy(*args, **kwargs):
+        seen.append(gate(*args, **kwargs))
+        return seen[-1]
+
+    corpus._resolve_near_dedup = spy
+    try:
+        df = build()
+    finally:
+        corpus._resolve_near_dedup = gate
+    return df, (seen[-1] if seen else None)
+
+
 def _scale_probe_corpus(spark, sf_dir: str) -> dict:
     """Corpus-side scale probe through the DEFAULT entry point
     (corpus_to_training(docs) — near_dedup="auto" since r8): the probe
@@ -728,14 +749,16 @@ def _scale_probe_corpus(spark, sf_dir: str) -> dict:
     # near-copies, so the cleaned/packed output should stay ~1x-sized
     # (the dedup stage drops the copies) — a wall that grew with the
     # RESULT would mean the near-dedup gate failed, not a scan cost
-    out_rows_1x = corpus.corpus_to_training(docs).count()
-    out_rows_10x = corpus.corpus_to_training(big).count()
+    train_1x, mode_1x = _resolved_near_dedup(lambda: corpus.corpus_to_training(docs))
+    train_10x, mode_10x = _resolved_near_dedup(lambda: corpus.corpus_to_training(big))
+    out_rows_1x = train_1x.count()
+    out_rows_10x = train_10x.count()
     out = {
         "mode": "auto (default entry point)",
-        # cached by the gate, so these read the decisions the timed
-        # runs actually used
-        "mode_1x": corpus._resolve_near_dedup(docs, 4, 3, "text"),
-        "mode_10x": corpus._resolve_near_dedup(big, 4, 3, "text"),
+        # the modes the timed runs took: rebuilding the same plan looks
+        # up the gate's memo entry for the same post-exact-dedup survivors
+        "mode_1x": mode_1x,
+        "mode_10x": mode_10x,
         "n_docs": n * 10,
         **big_out,
         "base_1x": base,

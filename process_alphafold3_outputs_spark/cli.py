@@ -22,7 +22,7 @@ from __future__ import annotations
 import argparse
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.screen import screen_binders
@@ -155,15 +155,20 @@ def _screen(args, spark: SparkSession, params: ScreenParams, out_root: str) -> d
     else:
         preds = read_summary_confidences(spark, args.input_dir)
         atoms = read_atoms(spark, args.input_dir)
-        chains = chains_from_atoms(atoms)
         pae = read_pae_long(spark, args.input_dir)
 
     # shared subplans computed ONCE, reused across report + sinks
     # (reference recomputed them per output path — inefficiencies I1/I2);
     # released on every exit path, also on a borrowed session
+    pinned: list[DataFrame] = []
     binders = screen_binders(preds, params).cache()
-    contacts = compute_contacts(preds, chains, pae, atoms, params).cache()
     try:
+        if not args.from_tables:
+            # parsed ONCE: the contact join, both bounds rows (via
+            # chains_from_atoms) and every structure sink read these atoms
+            atoms = _pin(atoms, pinned)
+            chains = chains_from_atoms(atoms)
+        contacts = _pin(compute_contacts(preds, chains, pae, atoms, params), pinned)
         report = interaction_report(preds, chains, pae, atoms, params, contacts=contacts)
         if getattr(args, "distributed_csv", False):
             from .plans.pipeline import write_report
@@ -249,7 +254,22 @@ def _screen(args, spark: SparkSession, params: ScreenParams, out_root: str) -> d
         return result
     finally:
         binders.unpersist()
-        contacts.unpersist()
+        for df in pinned:
+            _release(df)
+
+
+def _pin(df: DataFrame, pinned: list[DataFrame]) -> DataFrame:
+    """``df`` computed now and kept: a local checkpoint, so every later
+    plan reads the stored rows — also the SQL operators, whose temp views
+    do not pick up a ``cache()``d plan. Appended to ``pinned``."""
+    df = df.localCheckpoint()
+    pinned.append(df)
+    return df
+
+
+def _release(df: DataFrame) -> None:
+    """Drop the blocks behind a ``_pin``ned frame."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def main(argv: list[str] | None = None) -> None:

@@ -18,6 +18,10 @@ physical strategies, both pure-plan:
     is cheap JVM arithmetic, the shuffle is the scale bottleneck.
     Shuffle keys lead with ``job`` so the join never mixes jobs.
 
+``GRID`` is strategy (a) as the shared SQL fragment the flagship
+statement composes; the cell pitch and squared radius bind as parameter
+literals.
+
 Distance semantics: radius-INCLUSIVE (dist <= max_dist), matching
 Biopython ``NeighborSearch.search`` (KD-tree "within radius" is
 closed) — process_af3_outputs.py:233/:242.
@@ -36,6 +40,65 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..params import ScreenParams
+from .util import sql_statement
+
+# Both sides keep only standard-AA residues of one model (``is_aa``,
+# process_af3_outputs.py:230-231 — ligands/ions never contact).
+_SIDE = "SELECT * FROM atoms WHERE model_id = :model_id AND is_aa AND chain_id = {}"
+
+# 8-cell expansion on the partner side only: per axis, a point at
+# fraction f of its cell reaches (within ±d = half a cell) only its own
+# cell and the neighbour on the f-side of the midpoint. Proof sketch
+# (per axis, pitch 2d, c = floor(x/2d), f = x/2d - c):
+#   f <  0.5: [x-d, x+d] ⊆ [(c-0.5)·2d, (c+1)·2d) → cells {c-1, c}
+#   f >= 0.5: [x-d, x+d] ⊆ [c·2d, (c+1.5)·2d)     → cells {c, c+1}
+# (closed interval: the <= boundary atom still lands in a covered
+# cell — at f=0.5 exactly, x+d = (c+1)·2d opens cell c+1, included.)
+_HALF_CELL = (
+    "CAST(floor({a} / :cell) AS INT) AS _c{a}, "
+    "CASE WHEN {a} / :cell - CAST(floor({a} / :cell) AS INT) >= 0.5D "
+    "THEN 1 ELSE -1 END AS _s{a}"
+)
+_OFFSETS = ", ".join(
+    f"named_struct('ox', {ox}, 'oy', {oy}, 'oz', {oz})"
+    for ox in (0, 1) for oy in (0, 1) for oz in (0, 1)
+)
+
+#: O20-O22 over ``atoms`` and ``interacting`` (job, partner_res): the
+#: distinct contact pairs (job, partner_res, poi_res). Semi-join filter
+#: (O21, :231/:237): only atoms of interacting partner residues explode.
+GRID = f"""
+SELECT DISTINCT job, partner_res, poi_res FROM (
+  SELECT job, partner_res, px, py, pz,
+         _cx + _sx * _o.ox AS cx, _cy + _sy * _o.oy AS cy, _cz + _sz * _o.oz AS cz
+  FROM (
+    SELECT *, explode(array({_OFFSETS})) AS _o FROM (
+      SELECT job, residue_id AS partner_res, x AS px, y AS py, z AS pz,
+             {_HALF_CELL.format(a="x")}, {_HALF_CELL.format(a="y")}, {_HALF_CELL.format(a="z")}
+      FROM ({_SIDE.format(":partner_chain")})
+      LEFT SEMI JOIN (SELECT job, partner_res AS residue_id FROM interacting)
+      USING (job, residue_id))))
+JOIN (
+  SELECT job, residue_id AS poi_res, x, y, z,
+         CAST(floor(x / :cell) AS INT) AS cx, CAST(floor(y / :cell) AS INT) AS cy,
+         CAST(floor(z / :cell) AS INT) AS cz
+  FROM ({_SIDE.format(":poi_chain")}))
+USING (job, cx, cy, cz)
+WHERE power(px - x, 2) + power(py - y, 2) + power(pz - z, 2) <= :max_dist2
+"""
+
+
+def grid_args(params: ScreenParams, model_id: int = 0) -> dict:
+    """The values ``GRID`` binds: half-cell quantization, pitch 2·d, and
+    the radius-inclusive squared cutoff (NeighborSearch)."""
+    d = float(params.max_dist)
+    return {
+        "poi_chain": params.poi_chain,
+        "partner_chain": params.partner_chain,
+        "model_id": int(model_id),
+        "cell": 2.0 * d,
+        "max_dist2": d * d,
+    }
 
 
 def contact_pairs_grid(
@@ -50,93 +113,9 @@ def contact_pairs_grid(
     Join-key choice preserved from the reference (SURVEY §2.2 #8):
     ``partner_res`` (1-based token position) is compared against the
     CIF author residue id (:231, :237)."""
-    d = float(params.max_dist)
-    cell = 2.0 * d  # half-cell quantization: pitch 2·d, 8-cell explode
-    # Both sides keep only standard-AA residues (``is_aa(residue)``,
-    # process_af3_outputs.py:230-231 — ligands/ions never contact).
-    base = atoms.filter((F.col("model_id") == model_id) & F.col("is_aa"))
-
-    poi = base.filter(F.col("chain_id") == params.poi_chain).select(
-        "job",
-        F.col("residue_id").alias("poi_res"),
-        "x",
-        "y",
-        "z",
-        F.floor(F.col("x") / cell).cast("int").alias("cx"),
-        F.floor(F.col("y") / cell).cast("int").alias("cy"),
-        F.floor(F.col("z") / cell).cast("int").alias("cz"),
-    )
-
-    # Semi-join filter (O21, :231/:237): only interacting partner residues.
-    partner = (
-        base.filter(F.col("chain_id") == params.partner_chain)
-        .join(
-            interacting.select("job", F.col("partner_res").alias("residue_id")),
-            ["job", "residue_id"],
-            "left_semi",
-        )
-        .select("job", F.col("residue_id").alias("partner_res"), "x", "y", "z")
-    )
-
-    # 8-cell expansion on the partner side only: per axis, a point at
-    # fraction f of its cell reaches (within ±d = half a cell) only its
-    # own cell and the neighbour on the f-side of the midpoint. Proof
-    # sketch (per axis, pitch 2d, c = floor(x/2d), f = x/2d - c):
-    #   f <  0.5: [x-d, x+d] ⊆ [(c-0.5)·2d, (c+1)·2d) → cells {c-1, c}
-    #   f >= 0.5: [x-d, x+d] ⊆ [c·2d, (c+1.5)·2d)     → cells {c, c+1}
-    # (closed interval: the <= boundary atom still lands in a covered
-    # cell — at f=0.5 exactly, x+d = (c+1)·2d opens cell c+1, included.)
-    def _half_cells(col: str):
-        q = F.col(col) / cell
-        c = F.floor(q).cast("int")
-        side = F.when(q - c >= 0.5, F.lit(1)).otherwise(F.lit(-1))
-        return c, side
-
-    pcx, psx = _half_cells("x")
-    pcy, psy = _half_cells("y")
-    pcz, psz = _half_cells("z")
-    partner_q = partner.select(
-        "job",
-        "partner_res",
-        F.col("x").alias("px"),
-        F.col("y").alias("py"),
-        F.col("z").alias("pz"),
-        pcx.alias("_cx"),
-        psx.alias("_sx"),
-        pcy.alias("_cy"),
-        psy.alias("_sy"),
-        pcz.alias("_cz"),
-        psz.alias("_sz"),
-    )
-    offsets = F.array(
-        *[
-            F.struct(F.lit(ox).alias("ox"), F.lit(oy).alias("oy"), F.lit(oz).alias("oz"))
-            for ox in (0, 1)
-            for oy in (0, 1)
-            for oz in (0, 1)
-        ]
-    )
-    partner_cells = partner_q.withColumn("_o", F.explode(offsets)).select(
-        "job",
-        "partner_res",
-        "px",
-        "py",
-        "pz",
-        (F.col("_cx") + F.col("_sx") * F.col("_o.ox")).alias("cx"),
-        (F.col("_cy") + F.col("_sy") * F.col("_o.oy")).alias("cy"),
-        (F.col("_cz") + F.col("_sz") * F.col("_o.oz")).alias("cz"),
-    )
-
-    dist2 = (
-        (F.col("px") - F.col("x")) ** 2
-        + (F.col("py") - F.col("y")) ** 2
-        + (F.col("pz") - F.col("z")) ** 2
-    )
-    return (
-        partner_cells.join(poi, ["job", "cx", "cy", "cz"])
-        .filter(dist2 <= F.lit(d * d))  # radius-inclusive (NeighborSearch)
-        .select("job", "partner_res", "poi_res")
-        .distinct()
+    return sql_statement(
+        [("contacts", GRID)], "SELECT * FROM contacts", grid_args(params, model_id),
+        atoms=atoms, interacting=interacting,
     )
 
 
@@ -191,12 +170,4 @@ def contact_pairs_numpy(
 
     return tagged.groupBy("job").applyInPandas(
         per_job, "job string, partner_res int, poi_res int"
-    )
-
-
-def contact_map(contacts: DataFrame) -> DataFrame:
-    """O22 (:239-249): distinct POI contacts per partner residue,
-    sorted for deterministic hashing (reference used an unordered set)."""
-    return contacts.groupBy("job", "partner_res").agg(
-        F.sort_array(F.collect_set("poi_res")).alias("poi_contacts")
     )

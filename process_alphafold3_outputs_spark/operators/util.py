@@ -2,7 +2,33 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+
+
+def sql_statement(
+    ctes: list[tuple[str, str]], select: str, args: dict, **tables: DataFrame
+) -> DataFrame:
+    """ONE ``spark.sql`` statement over shared SQL fragments: each input
+    DataFrame in ``tables`` becomes a CTE of its own name, then the
+    fragment CTEs ``ctes`` (name, body) in order, then ``select``.
+
+    Fragments read their inputs by those fixed relation names, so one
+    fragment text serves every composition. Values bind through the named
+    parameter markers in ``args`` (never spliced into the text), so the
+    text depends only on the query's shape. Catalyst analyses the whole
+    statement in one call — a few dozen py4j round trips, where the
+    equivalent DataFrame-API chain pays one analysis per call. Each value
+    becomes its literal Column through one JVM ``lit`` call (``F.lit``
+    would re-resolve the JVM function per value, three round trips)."""
+    spark = next(iter(tables.values())).sparkSession
+    lit = getattr(spark._jvm, "org.apache.spark.sql.functions").lit
+    defs = [f"{n} AS (SELECT * FROM {{{n}}})" for n in tables]
+    defs += [f"{n} AS ({body})" for n, body in ctes]
+    return spark.sql(
+        "WITH " + ",\n".join(defs) + "\n" + select,
+        args={k: Column(lit(v)) for k, v in args.items()},
+        **tables,
+    )
 
 
 def spread(df: DataFrame, *key_cols: str) -> DataFrame:

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.screen import SCREEN
+
 AF3_TABLES = ("predictions", "chains", "pae_long", "atoms")
 
 
@@ -20,29 +22,20 @@ def register_af3_views(
     return names
 
 
-SCREEN_SQL = """
-SELECT job,
-       round(coalesce(iptm, 0), 6) AS iptm,
-       round(coalesce(ptm, 0), 6) AS ptm,
-       round(try_element_at(try_element_at(chain_pair_pae_min, {poi}), {partner}), 6)
-           AS pae_value
-FROM af3_predictions
-WHERE coalesce(iptm, 0) >= {min_iptm}
-  AND coalesce(ptm, 0) >= {min_ptm}
-  AND try_element_at(try_element_at(chain_pair_pae_min, {poi}), {partner}) < {max_pae}
-"""
-
-
 def screen_binders_sql(
     spark: SparkSession, poi_idx: int, partner_idx: int,
     min_iptm: float = 0.0, min_ptm: float = 0.0, max_pae: float = 15.0,
 ) -> DataFrame:
     """The O5-O8 binder screen as a spark.sql query over the registered
-    views — identical semantics (and plan) to operators.screen."""
+    ``af3_predictions`` view: the shared ``SCREEN`` fragment (the one
+    ``operators.screen`` runs), rounded to 6 decimals on top. ``poi_idx``
+    and ``partner_idx`` are 0-based chain indices."""
     return spark.sql(
-        SCREEN_SQL.format(
-            poi=poi_idx + 1, partner=partner_idx + 1,
-            min_iptm=float(min_iptm), min_ptm=float(min_ptm),
-            max_pae=float(max_pae),
-        )
+        f"""WITH predictions AS (SELECT * FROM af3_predictions), screen AS ({SCREEN})
+        SELECT job, round(iptm, 6) AS iptm, round(ptm, 6) AS ptm,
+               round(pae_value, 6) AS pae_value
+        FROM screen""",
+        args={"poi_idx": poi_idx + 1, "partner_idx": partner_idx + 1,
+              "min_iptm": float(min_iptm), "min_ptm": float(min_ptm),
+              "max_pae": float(max_pae)},
     )

@@ -7,6 +7,10 @@ combination — re-reading and re-parsing everything (its per-run cost ×
 once by the LOOSEST cutoff (still pushed down), then count matches per
 (job, token, param) with CASE-per-param inside a single hash
 aggregation. Corpus I/O is paid once regardless of grid size.
+
+The sweep is ONE ``spark.sql`` statement over the shared bounds and
+slice fragments of ``operators.intervals``; its text depends only on
+the number of grid points, and every cutoff binds as a parameter.
 """
 
 from __future__ import annotations
@@ -14,9 +18,15 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..operators.intervals import job_bounds, pae_hits, partner_tokens
+from ..operators.intervals import (
+    PAE_HITS,
+    PARTNER_TOKENS,
+    bounds_args,
+    bounds_fragment,
+    with_sequence,
+)
+from ..operators.util import sql_statement
 from ..params import ScreenParams
 
 
@@ -38,6 +48,38 @@ def sweep_grid(
     ]
 
 
+def _sweep_sql(n: int) -> tuple[list[tuple[str, str]], str]:
+    """The CTEs and select over ``screened`` for ``n`` grid points:
+    per-point conditional counts in one aggregation, exploded to the
+    points whose count clears their ``min_residues``; then, per point, a
+    partner-token branch guarded by ``min_residues <= 0`` (reference
+    parity: every in-range partner token qualifies, see
+    ``intervals.PARTNER_TOKENS``), which the optimizer prunes for every
+    point with a positive ``min_residues``."""
+    counts = ", ".join(
+        f"sum(CASE WHEN pae < :pae{i} THEN 1 ELSE 0 END) AS _n{i}" for i in range(n))
+    keeps = ", ".join(
+        f"struct(:id{i} AS param_id, _n{i} >= :mr{i} AND :mr{i} > 0 AS keep)"
+        for i in range(n))
+    vacuous = "".join(
+        f"\nUNION ALL SELECT :id{i}, job, partner_res FROM tokens WHERE :mr{i} <= 0"
+        for i in range(n))
+    ctes = [
+        ("counts", f"""
+SELECT job, aligned_token, partner_start, {counts}
+FROM ({PAE_HITS})
+GROUP BY job, aligned_token, partner_start"""),
+        ("tokens", PARTNER_TOKENS),
+    ]
+    return ctes, f"""
+SELECT _s.param_id AS param_id, job, partner_res FROM (
+  SELECT job, aligned_token - partner_start + 1 AS partner_res,
+         explode(array({keeps})) AS _s
+  FROM counts)
+WHERE _s.keep{vacuous}
+"""
+
+
 def sweep_interacting_residues(
     pae_long: DataFrame,
     chains: DataFrame,
@@ -52,52 +94,14 @@ def sweep_interacting_residues(
     point is ONE pass over the corpus; measuring the matrix would add a
     second. Equivalent for well-formed AF3 output (see
     identify_interacting_residues ``width_source``)."""
-    bounds = job_bounds(chains, base)
-    loosest = max(p.max_pae_cutoff for p in grid)
-    counts = pae_hits(pae_long, bounds, loosest).groupBy(
-        "job", "aligned_token", "partner_start"
-    ).agg(
-        *[
-            F.sum(
-                F.when(F.col("pae") < F.lit(float(p.max_pae_cutoff)), 1).otherwise(0)
-            ).alias(f"_n{p.param_id}")
-            for p in grid
-        ]
+    # the slice filter takes the loosest cutoff; each count applies its own
+    args = {**bounds_args(base), "max_pae": max(float(p.max_pae_cutoff) for p in grid)}
+    for i, p in enumerate(grid):
+        args.update({f"id{i}": int(p.param_id), f"pae{i}": float(p.max_pae_cutoff),
+                     f"mr{i}": int(p.min_residues_cutoff)})
+    ctes, select = _sweep_sql(len(grid))
+    return sql_statement(
+        [("bounds", bounds_fragment()), ("screened", "SELECT * FROM bounds"), *ctes],
+        select, args,
+        pae_long=pae_long, chains=with_sequence(chains),
     )
-    per_param = counts.select(
-        "job",
-        (F.col("aligned_token") - F.col("partner_start") + 1).alias("partner_res"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(p.param_id).alias("param_id"),
-                        (F.col(f"_n{p.param_id}") >= F.lit(int(p.min_residues_cutoff))).alias("keep"),
-                    )
-                    for p in grid
-                ]
-            )
-        ).alias("_s"),
-    )
-    kept = per_param.filter(F.col("_s.keep")).select(
-        F.col("_s.param_id").alias("param_id"), "job", "partner_res"
-    )
-    # Reference parity for min_residues <= 0 grid points: every in-range
-    # partner token qualifies (see intervals.partner_tokens).
-    vacuous = [p.param_id for p in grid if int(p.min_residues_cutoff) <= 0]
-    if vacuous:
-        all_tokens = (
-            partner_tokens(bounds)
-            .crossJoin(
-                F.broadcast(
-                    bounds.sparkSession.createDataFrame(
-                        [(pid,) for pid in vacuous], "param_id int"
-                    )
-                )
-            )
-            .select("param_id", "job", "partner_res")
-        )
-        kept = (
-            kept.filter(~F.col("param_id").isin(vacuous)).unionByName(all_tokens)
-        )
-    return kept

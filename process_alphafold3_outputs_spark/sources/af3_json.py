@@ -59,11 +59,8 @@ MAX_FALLBACK_FILES = 10_000
 
 
 def _summary_scan(spark: SparkSession, input_dir: str) -> DataFrame:
-    """The cached PERMISSIVE scan of every ``*_summary_confidences_0.json``
-    file, with its ``_path`` captured. Spark refuses
-    ``_corrupt_record``-only queries on an uncached JSON scan; summary
-    docs are ~100 B/job, so caching the screen input is cheap even at
-    full-corpus scale."""
+    """The PERMISSIVE scan of every ``*_summary_confidences_0.json``
+    file, with its ``_path`` captured."""
     return (
         spark.read.schema(SUMMARY_SCHEMA)
         .option("multiLine", "true")
@@ -74,8 +71,29 @@ def _summary_scan(spark: SparkSession, input_dir: str) -> DataFrame:
         .json(input_dir)
         .withColumn("_path", F.input_file_name())
         .filter(~F.col("_path").rlike(r"/\._"))  # AppleDouble junk (O2/O3)
-        .cache()
     )
+
+
+def _corrupt_files(scan: DataFrame) -> list[tuple[str, str]]:
+    """(path, first 80 chars) of each summary file the JVM parse
+    rejected, at most ``MAX_FALLBACK_FILES``, collected to the driver.
+    The query also reads every data column: Spark refuses a raw-JSON
+    query whose only data column is the corrupt record, and Jackson
+    skips the columns a query does not read, so a file malformed only
+    in one of those would otherwise go unnoticed."""
+    rows = (
+        scan.filter(F.col("_corrupt_record").isNotNull())
+        .select(
+            "_path",
+            F.substring("_corrupt_record", 1, 80).alias("raw_prefix"),
+            "iptm",
+            "ptm",
+            "chain_pair_pae_min",
+        )
+        .limit(MAX_FALLBACK_FILES)
+        .collect()
+    )
+    return list({r["_path"]: r["raw_prefix"] for r in rows}.items())
 
 
 def read_summary_confidences(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -92,21 +110,20 @@ def read_summary_confidences(spark: SparkSession, input_dir: str) -> DataFrame:
     happy path.
     """
     df = _summary_scan(spark, input_dir)
-    # job from the captured _path column — input_file_name() evaluates
-    # empty once rows come from cache instead of the file scan.
-    ok = (
-        df.filter(F.col("_corrupt_record").isNull())
-        .withColumn("job", F.regexp_extract(F.col("_path"), _JOB_FROM_PATH, 1))
-        .select("job", "iptm", "ptm", "chain_pair_pae_min")
+    bad_paths = [path for path, _ in _corrupt_files(df)]
+    # the happy path drops the rejected files by path, not by the
+    # corrupt-record column: a pruned query over it (``count()``,
+    # ``select("job")``) would read no other JSON column, which Spark
+    # refuses on a raw scan
+    ok = df.filter(~F.col("_path").isin(bad_paths)) if bad_paths else df
+    if len(bad_paths) >= MAX_FALLBACK_FILES:  # the files past the cap stay dropped
+        ok = ok.filter(F.col("_corrupt_record").isNull())
+    ok = ok.select(
+        F.regexp_extract(F.col("_path"), _JOB_FROM_PATH, 1).alias("job"),
+        "iptm",
+        "ptm",
+        "chain_pair_pae_min",
     )
-    bad_paths = [
-        r["_path"]
-        for r in df.filter(F.col("_corrupt_record").isNotNull())
-        .select("_path")
-        .distinct()
-        .limit(MAX_FALLBACK_FILES)
-        .collect()
-    ]
     if not bad_paths:
         return ok
     return ok.unionByName(_fallback_parse(spark, bad_paths))
@@ -258,12 +275,10 @@ def read_summary_errors(spark: SparkSession, input_dir: str) -> DataFrame:
     """O35 observability as data, not logs: one row per summary file the
     JSON parse rejected — (path, raw_prefix). A distributed engine
     cannot grep a driver log; the errors ARE a queryable side output
-    (SURVEY §2 O35: 'per-row error tracking as an errors DataFrame')."""
-    return (
-        _summary_scan(spark, input_dir)
-        .filter(F.col("_corrupt_record").isNotNull())
-        .select(
-            F.col("_path").alias("path"),
-            F.substring("_corrupt_record", 1, 80).alias("raw_prefix"),
-        )
+    (SURVEY §2 O35: 'per-row error tracking as an errors DataFrame').
+    The rows are collected when this is called (bounded, like the
+    fallback's path collect) and handed back as a small DataFrame."""
+    return spark.createDataFrame(
+        _corrupt_files(_summary_scan(spark, input_dir)),
+        "path string, raw_prefix string",
     )

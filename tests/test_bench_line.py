@@ -116,3 +116,23 @@ def test_driver_window_order_and_cap():
     # the weaker rows-only check is allowed but must stay deliberate:
     # anything here needs a docstring note in its query function
     assert waived <= getattr(entry_mod, "_NO_ORACLE_OK", waived)
+
+
+def test_scale_probe_records_the_mode_the_pipeline_resolved(spark, sf_dir):
+    """The corpus scale probe records the near-dup mode its timed runs
+    took: the auto gate's memo entry for the post-exact-dedup survivors,
+    not a fresh probe of the raw corpus under another memo key."""
+    from process_alphafold3_outputs_spark.plans import corpus
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    corpus.clear_auto_mode_cache()
+    handles = []
+    try:
+        _, mode = bench._resolved_near_dedup(
+            lambda: corpus.corpus_to_training(docs, handles=handles))
+        resolved = {k[0]: v for k, v in corpus._AUTO_MODE_CACHE.items()}
+        assert resolved == {"survivors": mode}
+    finally:
+        for h in handles:
+            h.unpersist()
+        corpus.clear_auto_mode_cache()

@@ -10,22 +10,46 @@ from process_alphafold3_outputs_spark.cli import build_parser, run
 from process_alphafold3_outputs_spark.fixtures import write_file_corpus
 
 
-def _persisted(spark, corpus_dir: str) -> set:
-    """Persisted RDD ids, after materialising the summary reader's own
-    JSON-scan cache for ``corpus_dir`` (the reader keeps it; the CLI's
-    binders/contacts caches are what must not outlive a run)."""
-    from process_alphafold3_outputs_spark.sources.af3_json import (
-        read_summary_confidences,
-    )
-
-    read_summary_confidences(spark, corpus_dir).count()
+def _persisted(spark) -> set:
+    """Persisted RDD ids of the session."""
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
+def _sql_executions(spark) -> set:
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    return {execs.apply(i).executionId() for i in range(execs.size())}
+
+
+def _files_read_under(spark, root: str, since: set) -> int:
+    """Files read by the ``binaryFile`` scans of ``root`` (the CIF
+    reader's scan) in the SQL executions not in ``since``, from the
+    scans' "number of files read" metric — once per metric, as a scan
+    that a later plan shows again keeps its metric."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    files = {}
+    for eid in _sql_executions(spark) - since:
+        values = store.executionMetrics(eid)
+        nodes = store.planGraph(eid).allNodes()
+        for i in range(nodes.size()):
+            node = nodes.apply(i)
+            if node.name().strip() != "Scan binaryFile" or f"[file:{root}]" not in node.desc():
+                continue
+            metrics = node.metrics()
+            for k in range(metrics.size()):
+                m = metrics.apply(k)
+                v = values.get(m.accumulatorId())
+                if m.name() == "number of files read" and v.isDefined():
+                    files[m.accumulatorId()] = int(v.get().replace(",", ""))
+    return sum(files.values())
 
 
 def test_cli_end_to_end(spark, tmp_path):
     corpus_dir = str(tmp_path / "corpus")
     out_dir = str(tmp_path / "out")
     write_file_corpus(corpus_dir, n_jobs=6, seed=4)
+    n_cif = sum(f.endswith(".cif") for _, _, fs in os.walk(corpus_dir) for f in fs)
+    since = _sql_executions(spark)
 
     args = build_parser().parse_args(
         ["-id", corpus_dir, "--output-dir", out_dir, "-pae", "15.0"]
@@ -33,6 +57,9 @@ def test_cli_end_to_end(spark, tmp_path):
     result = run(args, spark=spark)
 
     assert result["n_binders"] > 0
+    # each CIF parsed once: the contact join, both bounds rows and the
+    # structure sinks share one parse
+    assert _files_read_under(spark, corpus_dir, since) == n_cif
     csv = os.path.join(out_dir, "interaction_analysis_PAE_15.0_max_dist_8.0.csv")
     assert os.path.exists(csv)
     header = open(csv).readline().strip().split(",")
@@ -60,11 +87,11 @@ def test_cli_report_only(spark, tmp_path):
     args = build_parser().parse_args(
         ["-id", corpus_dir, "--output-dir", out_dir, "--skip-structures"]
     )
-    before = _persisted(spark, corpus_dir)
+    before = _persisted(spark)
     result = run(args, spark=spark)
     assert result["interaction_cifs"] == 0
     assert os.path.exists(result["csv"])
-    assert _persisted(spark, corpus_dir) - before == set()  # borrowed session: no pins left
+    assert _persisted(spark) - before == set()  # borrowed session: no pins left
 
 
 def test_cli_releases_caches_when_a_sink_fails(spark, tmp_path, monkeypatch):
@@ -81,10 +108,10 @@ def test_cli_releases_caches_when_a_sink_fails(spark, tmp_path, monkeypatch):
 
     # the PAE CSV sink runs after the report has materialised both caches
     monkeypatch.setattr(af3_json, "write_pae_matrix_csvs", failing_sink)
-    before = _persisted(spark, corpus_dir)
+    before = _persisted(spark)
     with pytest.raises(RuntimeError, match="sink failed"):
         run(args, spark=spark)
-    assert _persisted(spark, corpus_dir) - before == set()
+    assert _persisted(spark) - before == set()
 
 
 def test_corpus_cli_releases_staged_blocks(spark, tmp_path, sf_dir):
@@ -133,6 +160,7 @@ def test_ingest_then_query_from_tables(spark, tmp_path):
     out1 = str(tmp_path / "o4a")
     out2 = str(tmp_path / "o4b")
     write_file_corpus(corpus_dir, n_jobs=6, seed=12)
+    before = _persisted(spark)
 
     r_ing = run(
         build_parser().parse_args(["-id", corpus_dir, "--ingest", tables]),
@@ -160,6 +188,9 @@ def test_ingest_then_query_from_tables(spark, tmp_path):
     rows1 = sorted(open(r_files["csv"]).read().splitlines())
     rows2 = sorted(open(r_tables["csv"]).read().splitlines())
     assert rows1 == rows2 and len(rows1) > 1
+    # the summary reader keeps no cached scan: nothing stays pinned on
+    # the borrowed session
+    assert _persisted(spark) - before == set()
 
 
 def test_cli_emits_reference_named_pae_csvs(spark, tmp_path):

@@ -170,16 +170,44 @@ def test_pipeline_with_skewed_job_sizes(spark, tmp_path):
 def test_reversed_chain_direction(af3, corpus):
     """poi=B, partner=A exercises PAE asymmetry (SURVEY §2.2 #4):
     chain_pair_pae_min[1][0] and the transposed matrix slice must be
-    used — a direction bug would still pass the default-direction tests."""
-    params = ScreenParams(poi_chain="B", partner_chain="A")
-    report = interaction_report(
-        af3["predictions"], af3["chains"], af3["pae_long"], af3["atoms"], params
+    used — a direction bug would still pass the default-direction tests.
+    Checked at the default min_residues and through the partner-token
+    branch (min_residues=0, which widens the partner ranges)."""
+    rows = {}
+    for mr in (5, 0):
+        params = ScreenParams(poi_chain="B", partner_chain="A", min_residues_cutoff=mr)
+        report = interaction_report(
+            af3["predictions"], af3["chains"], af3["pae_long"], af3["atoms"], params
+        )
+        cols = params.report_columns()
+        assert cols[1] == "Contact_residues_POI_chain_B"
+        got = {tuple(r[c] for c in cols) for r in report.collect()}
+        want = set(model.full_pipeline(corpus, poi="B", partner="A", min_residues=mr))
+        assert got == want and want  # the transposed slice checked on real rows
+        rows[mr] = got
+    assert rows[5] != rows[0]
+
+
+def test_hostile_chain_labels_bind_as_values(af3):
+    """Chain labels are bound as parameter values, never spliced into the
+    SQL text: a quote, a backtick or an injected predicate is just an
+    unknown label — 0 rows and no SQL error."""
+    from process_alphafold3_outputs_spark.plans.sweep import (
+        sweep_grid,
+        sweep_interacting_residues,
     )
-    cols = params.report_columns()
-    assert cols[1] == "Contact_residues_POI_chain_B"
-    got = {tuple(r[c] for c in cols) for r in report.collect()}
-    want = set(model.full_pipeline(corpus, poi="B", partner="A"))
-    assert got == want  # typically sparse/empty — must agree exactly either way
+
+    for poi, partner in (("A' OR '1'='1", "B"), ("A", "B` OR 1=1 --"), ("A", "B'); --")):
+        params = ScreenParams(poi_chain=poi, partner_chain=partner)
+        report = interaction_report(
+            af3["predictions"], af3["chains"], af3["pae_long"], af3["atoms"], params
+        )
+        assert report.columns == params.report_columns()
+        assert report.collect() == []
+        sweep = sweep_interacting_residues(
+            af3["pae_long"], af3["chains"], sweep_grid([15.0], [0, 5]), base=params
+        )
+        assert sweep.collect() == []
 
 
 def test_iptm_boundary_equality_passes(af3, corpus):

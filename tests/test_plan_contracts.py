@@ -121,6 +121,50 @@ def test_flagship_reads_each_table_once(spark, af3):
     assert _scans(sweep, "pae_long") == 1
 
 
+def _py4j_calls(spark, build) -> int:
+    """py4j round trips (``send_command`` calls) the calling thread makes
+    while ``build`` runs — py4j's finalizer thread, which releases
+    garbage-collected JVM references, is not the build's cost."""
+    import threading
+
+    client = spark.sparkContext._gateway._gateway_client
+    real = client.send_command
+    me = threading.get_ident()
+    calls = 0
+
+    def counting(*args, **kwargs):
+        nonlocal calls
+        calls += threading.get_ident() == me
+        return real(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        build()
+    finally:
+        client.send_command = real
+    return calls
+
+
+def test_screen_point_plan_build_budget(spark, af3):
+    """A fresh screen point is ONE spark.sql statement over the shared
+    fragments, values bound as parameters: building the flagship report
+    and a 2x2 sweep costs a few dozen py4j round trips (the step-by-step
+    DataFrame-API chain took ~4,600 and ~1,400)."""
+    from process_alphafold3_outputs_spark.plans.pipeline import interaction_report
+    from process_alphafold3_outputs_spark.plans.sweep import (
+        sweep_grid,
+        sweep_interacting_residues,
+    )
+
+    p = ScreenParams(max_pae_cutoff=13.37, min_residues_cutoff=4, max_dist=7.5)
+    report = _py4j_calls(spark, lambda: interaction_report(
+        af3["predictions"], af3["chains"], af3["pae_long"], af3["atoms"], p))
+    sweep = _py4j_calls(spark, lambda: sweep_interacting_residues(
+        af3["pae_long"], af3["chains"], sweep_grid([7.77, 14.9], [3, 6])))
+    assert report <= 150, report
+    assert sweep <= 50, sweep
+
+
 def test_dim_joins_broadcast(spark, sf_dir):
     from process_alphafold3_outputs_spark.plans.driver_queries import (
         revenue_per_nation,

@@ -172,7 +172,6 @@ _DEFERRED: set[str] = {
     "two_level_islands",     # O24 — af3_interaction_report
     "anti_join",             # O21 — semi_join row + pipeline_corpus_clean anti-join
     "conditional_sum",       # O13 — file_chains_from_cifs token rule
-    "dedup_simhash",         # superseded by dedup_simhash64
     "dedup_simhash64",       # rotated OUT in r9 for entity_resolution
                              # (Hamming banding recall pinned in pytest;
                              # stays benched + oracle-mirrored)
@@ -194,7 +193,7 @@ _DEFERRED: set[str] = {
     "screen_filter",         # O6 — af3_screen applies the same conjunctive filter
     "array_element_screen",  # O8 — af3_screen reads the same 2-D array element
     "lookup_default",        # O12 — file_chains_from_cifs runs the 3→1 lookup end-to-end
-    "similarity_topk_lsh",   # superseded by similarity_topk_lsh_multiprobe (n_probe=1 is its special case)
+    "similarity_topk_lsh",   # the n_probe=1 case of similarity_topk_lsh_multiprobe
     "dedup_simhash64_near",  # banding recall pinned in pytest; simhash64 row stays
     "dedup_lsh_buckets",     # group form of dedup_minhash_lsh (pair form stays)
     "dedup_paragraphs",      # sub-document exact dedup; mechanics (chunker,
@@ -340,9 +339,6 @@ _DEFERRED: set[str] = {
     "event_transitions",     # Markov transition matrix; lag-window
                              # mechanics evidenced by green sessionize
                              # row (deferred: headroom)
-    "dedup_clusters_stars",  # star-algorithm CC twin (same oracle as
-                             # the green dedup_clusters row; deferred:
-                             # headroom)
     "similarity_topk_pq_refined",  # two-stage ADC + exact re-rank;
                              # both stages' mechanics oracle-green
                              # separately (deferred: headroom)

@@ -4,7 +4,7 @@ Four families, all JVM-side (no Python UDFs in any hot path):
 
 - exact:        md5(normalized text) hash-groupBy
 - MinHash+LSH:  shingle → per-seed min-hash → band signature → bucket join
-- SimHash:      token-hash bit voting → 16-bit signature equality
+- SimHash:      token-hash bit voting → 64-bit signature, 16-bit bands
 - n-gram Jaccard: shingle inverted index self-join (exact similarity)
 
 Scale design: every candidate-pair generator works through an inverted
@@ -1579,12 +1579,15 @@ def connected_components(
 # SimHash
 # --------------------------------------------------------------------------
 
-def _bit_votes(docs: DataFrame, n_bits: int, text_col: str) -> DataFrame:
-    """(doc_id, v0..v{n_bits-1}) — per-bit ±1 vote sums over the md5
-    hashes of every token occurrence. ONE shuffle keyed by doc_id with
-    ``n_bits`` parallel conditional sums (map-side combined) — no
-    token × bit explode, so widening 16 → 64 bits costs plan width,
-    not shuffle volume (same construction trick as the MinHash aggs).
+_SIMHASH_BITS = 64
+
+
+def _bit_votes(docs: DataFrame, text_col: str) -> DataFrame:
+    """(doc_id, v0..v63) — per-bit ±1 vote sums over the md5 hashes of
+    every token occurrence. ONE shuffle keyed by doc_id with 64 parallel
+    conditional sums (map-side combined) — no token × bit explode, so
+    the signature width costs plan width, not shuffle volume (same
+    construction trick as the MinHash aggs).
 
     Bit b = ``(word[b/32] >> b%32) & 1`` over 32-bit words parsed from
     the md5 hex with ONE conv per word — integer shift arithmetic, not
@@ -1595,7 +1598,7 @@ def _bit_votes(docs: DataFrame, n_bits: int, text_col: str) -> DataFrame:
         .select("doc_id", F.explode(F.split("_norm", " ")).alias("tok"))
         .withColumn("h", F.md5("tok"))
     )
-    for wi in range((n_bits + 31) // 32):
+    for wi in range(_SIMHASH_BITS // 32):
         toks = toks.withColumn(
             f"_w{wi}",
             F.conv(F.substring("h", 8 * wi + 1, 8), 16, 10).cast("long"),
@@ -1607,7 +1610,7 @@ def _bit_votes(docs: DataFrame, n_bits: int, text_col: str) -> DataFrame:
     return toks.groupBy("doc_id").agg(
         *[
             F.sum(F.when(bitval(b) == 1, 1).otherwise(-1)).alias(f"v{b}")
-            for b in range(n_bits)
+            for b in range(_SIMHASH_BITS)
         ]
     )
 
@@ -1622,23 +1625,12 @@ def _sig_from_votes(lo_bit: int, hi_bit: int):
     return out
 
 
-def simhash(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, simhash) — 16-bit SimHash over word token hashes.
-
-    Per token, the first 4 hex nibbles of md5 give 16 bits; each bit
-    votes ±1; the signature's bit is 1 when the vote sum is positive.
-    16-bit equality buckets are demo-scale (birthday collisions at
-    ~10³ docs) — use :func:`simhash64` + band buckets at corpus scale."""
-    return _bit_votes(docs, 16, text_col).select(
-        "doc_id", _sig_from_votes(0, 16).alias("simhash")
-    )
-
-
 def simhash64(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, sim_hi, sim_lo) — 64-bit SimHash as two 32-bit words
     (bits 32-63 / 0-31; a single signed long cannot carry bit 63).
-    Collision-safe at 10^4+ docs where the 16-bit variant saturates."""
-    return _bit_votes(docs, 64, text_col).select(
+    Collision-safe at 10^4+ docs, where a 16-bit signature (the low 16
+    bits of ``sim_lo``) saturates."""
+    return _bit_votes(docs, text_col).select(
         "doc_id",
         _sig_from_votes(32, 64).alias("sim_hi"),
         _sig_from_votes(0, 32).alias("sim_lo"),
@@ -1692,16 +1684,6 @@ def simhash64_near_pairs(
     if max_hamming is not None:
         pairs = pairs.filter(F.col("hamming") <= max_hamming)
     return pairs
-
-
-def simhash_dup_groups(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Docs sharing an identical 16-bit simhash (candidate near-dups)."""
-    sh = simhash(docs, text_col)
-    return (
-        sh.groupBy("simhash")
-        .agg(F.min("doc_id").alias("keeper_doc_id"), F.count(F.lit(1)).alias("n_docs"))
-        .filter(F.col("n_docs") > 1)
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1909,143 +1891,6 @@ def cluster_representatives(
         F.col("_r.id").alias("rep_doc_id"),
         F.col("_r.s").alias("rep_score"),
         "n_members",
-    )
-
-
-def connected_components_stars(
-    pairs: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iters: int = 50,
-    stats: dict | None = None,
-    check_every: int = 1,
-) -> DataFrame:
-    """(doc_id, cluster_id) — the alternating LARGE-STAR / SMALL-STAR
-    connected-components algorithm (Kiveris et al., "Connected
-    Components in MapReduce and Beyond"): an alternative engine to
-    :func:`connected_components` with identical output (differential-
-    pinned), preferred when components are GIANT.
-
-    Why it exists: pointer doubling's ``lbl(lbl(u))`` self-join keys by
-    the label value, and as a component converges every one of its
-    nodes carries the same min label — a billion-node component sends
-    a billion rows to ONE reducer key (AQE skew-split mitigates but
-    the skew is structural). Large/small-star never joins by label:
-    each round re-keys by NODE id (near-uniform), and the star
-    transforms provably shrink the edge set toward one star per
-    component in O(log² n) rounds with per-round work proportional to
-    the current edge count.
-
-    Per round: large-star hangs every strictly-larger neighbour of u
-    under min(Γ(u) ∪ u); small-star re-hangs the not-larger
-    neighbourhood under its minimum. Both are one node-keyed min-agg +
-    one edge-keyed join — no label-keyed operation anywhere.
-    Convergence = the edge set reaches a fixpoint (star edges only);
-    labels then read off as min(Γ(u) ∪ u).
-
-    ``check_every`` amortizes the per-round fixpoint count (a driver
-    action) exactly as in :func:`connected_components`: with k>1 the
-    count runs every k-th round only — extra rounds past the fixpoint
-    map a star edge set to itself, so the result is identical and only
-    the stopping rule coarsens.
-    """
-    if check_every < 1:
-        raise ValueError(f"check_every must be >= 1, got {check_every}")
-    # Materialize the (possibly expensive) upstream pair plan EXACTLY
-    # ONCE — all_nodes and the edge set both derive from this
-    # checkpoint (same policy as connected_components: the candidate
-    # generator used to run twice and dominated the stars row's cost,
-    # measured 6.0s -> ~4s at sf0.1).
-    raw = pairs.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).localCheckpoint()
-    all_nodes = (
-        raw.select(F.col("a").alias("n"))
-        .union(raw.select(F.col("b").alias("n")))
-        .distinct()
-        .localCheckpoint()
-    )
-    e = (
-        raw.select(
-            F.least("a", "b").alias("lo"), F.greatest("a", "b").alias("hi")
-        )
-        .filter(F.col("lo") != F.col("hi"))
-        .distinct()
-        .localCheckpoint()
-    )
-    rounds = 0
-    n_prev: int | None = None
-    for _ in range(max_iters):
-        rounds += 1
-        # ---- large-star: ∀v∈Γ(u) with v>u → edge (m, v), m = min(Γ(u)∪u)
-        und = e.select(F.col("lo").alias("u"), F.col("hi").alias("v")).union(
-            e.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
-        )
-        m = und.groupBy("u").agg(F.min("v").alias("_mv"))
-        m = m.select("u", F.least("_mv", "u").alias("m"))
-        # NOT distinct'd: duplicates here only fan modestly into the
-        # small-star min-aggs (which are duplicate-insensitive) and the
-        # round's final distinct collapses them — dropping this
-        # intermediate shuffle saves one full Exchange per round
-        e1 = (
-            und.join(m, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("m").alias("lo"), F.col("v").alias("hi"))
-        )
-        # ---- small-star: m = min of the ≤u neighbourhood (∪ u);
-        # re-hang each smaller neighbour and u itself under m
-        und1 = e1.select(F.col("lo").alias("u"), F.col("hi").alias("v")).union(
-            e1.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
-        )
-        le = und1.filter(F.col("v") < F.col("u"))
-        m2 = le.groupBy("u").agg(F.min("v").alias("m"))
-        rehang = (
-            le.join(m2, "u")
-            .filter(F.col("v") != F.col("m"))
-            .select(F.col("m").alias("lo"), F.col("v").alias("hi"))
-        )
-        anchor = m2.select(F.col("m").alias("lo"), F.col("u").alias("hi"))
-        e2 = rehang.union(anchor).distinct().localCheckpoint()
-        if rounds % check_every == 0 or rounds == max_iters:
-            # fixpoint test with ONE anti-join instead of two: both
-            # sides are distinct sets, so e2 == e ⇔ |e2| == |e| and
-            # e2 \ e = ∅ (|e| carries over from the previous check's
-            # |e2| when check_every == 1, so the count is one tiny
-            # job; the anti-join runs only on size match). On the FIRST
-            # check n_prev is unknown — count the previous round's edge
-            # set directly (checkpointed → the count is a block-size
-            # sum, one tiny job) instead of assuming "changed": the
-            # assumption forced every run through check_every extra
-            # no-op rounds after convergence (measured 4 rounds instead
-            # of 2 — r5 judge item #5, the whole stars-vs-doubling gap)
-            n2 = e2.count()
-            prev_n = e.count() if n_prev is None else n_prev
-            changed = 1
-            if n2 == prev_n:
-                changed = e2.join(e, ["lo", "hi"], "left_anti").count()
-            n_prev = n2
-            e = e2
-            if changed == 0:
-                break
-        else:
-            # skipped check: keep n_prev from the last check — the
-            # size gate then compares across the check gap, which is
-            # exactly the "has the edge set stopped moving" signal
-            e = e2
-    if stats is not None:
-        stats["rounds"] = rounds
-    und = e.select(F.col("lo").alias("u"), F.col("hi").alias("v")).union(
-        e.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
-    )
-    labels = und.groupBy("u").agg(
-        F.least(F.min("v"), F.first("u")).alias("cluster_id")
-    )
-    # nodes whose every pair was a self-pair have no edges: own cluster
-    return all_nodes.join(
-        labels.withColumnRenamed("u", "n"), "n", "left"
-    ).select(
-        F.col("n").alias("doc_id"),
-        F.coalesce("cluster_id", "n").alias("cluster_id"),
     )
 
 
@@ -2376,7 +2221,7 @@ def edit_distance_pairs(
     ``max_dist + 1`` non-empty segments (a weaker bound, but one
     uniform loud contract beats two mode-dependent ones). Shorter rows
     are REFUSED loudly by a ``raise_error`` INSIDE the text projection
-    (the topk_lsh in-path-guard pattern): plan construction is fully
+    (the LSH plane-dot in-path-guard pattern): plan construction is fully
     lazy and the check costs one length compare per row on the scan
     the candidate build already makes — the previous eager ``.count()``
     guard paid one extra full corpus scan per CALL at plan-build time.

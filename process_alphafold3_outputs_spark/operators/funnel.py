@@ -350,7 +350,7 @@ def attribute_conversions(
                 "user", "conversion_ts", "touch_type", "touch_ts",
                 # _n >= 0 is always true; referencing the guarded count
                 # keeps the refusal in the plan (a dead column would be
-                # pruned — the topk_lsh in-path-guard pattern).
+                # pruned — the LSH plane-dot in-path-guard pattern).
                 F.when(F.col("_n") >= 0, F.lit(1.0)).alias("credit"),
             )
         )

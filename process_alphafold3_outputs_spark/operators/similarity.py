@@ -69,9 +69,10 @@ def _with_plane_dots(
     embeddings: DataFrame, n_planes: int, dim: int | None = None
 ) -> DataFrame:
     """(vec_id, vec, dots) — per-vector dot products against the
-    ``n_planes`` deterministic hyperplanes. Shared kernel of the
-    single- and multi-probe LSH paths: one pass, no shuffle, planes as
-    a one-row broadcast table (not ``dim × n_planes`` plan literals).
+    ``n_planes`` deterministic hyperplanes. Shared kernel of
+    :func:`lsh_buckets` and :func:`topk_lsh_multiprobe`: one pass, no
+    shuffle, planes as a one-row broadcast table (not ``dim × n_planes``
+    plan literals).
 
     ``dim`` is part of the table contract (EMBEDDING_DIM default) —
     plan construction is fully lazy: NO Spark job fires here (the old
@@ -135,42 +136,6 @@ def lsh_buckets(
     )
 
 
-def topk_lsh(
-    embeddings: DataFrame,
-    query_ids: DataFrame | Column,
-    k: int = 5,
-    n_planes: int = 6,
-) -> DataFrame:
-    """Approximate top-k: rank only within the query's LSH bucket.
-    At scale the corpus side is shuffled once by bucket; each query
-    probes exactly one bucket (multi-probe is a k>1 extension)."""
-    b = lsh_buckets(embeddings, n_planes)
-    if isinstance(query_ids, Column):
-        q = b.join(embeddings.filter(query_ids).select("vec_id"), "vec_id", "left_semi")
-    else:
-        q = b.join(query_ids.select("vec_id"), "vec_id", "left_semi")
-    q = q.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("vec").alias("qvec"),
-        "bucket",
-    )
-    cand = b.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("vec").alias("cvec"), "bucket"
-    )
-    scored = (
-        F.broadcast(q)
-        .join(cand, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", cosine(F.col("qvec"), F.col("cvec")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "rk", F.round("sim", 6).alias("sim"))
-    )
-
-
 def topk_lsh_multiprobe(
     embeddings: DataFrame,
     query_ids: DataFrame | Column,
@@ -187,9 +152,10 @@ def topk_lsh_multiprobe(
     climbs toward brute force with n_probe while the corpus is still
     bucketed ONCE; only the tiny query side fans out ×n_probe.
 
-    Every corpus vector has exactly one bucket and the probe buckets
-    are pairwise distinct (XOR with distinct powers of two), so no
-    (query, neighbor) pair is scored twice — no dedup stage needed."""
+    ``n_probe=1`` is single-probe LSH: rank only within the query's own
+    bucket. Every corpus vector has exactly one bucket and the probe
+    buckets are pairwise distinct (XOR with distinct powers of two), so
+    no (query, neighbor) pair is scored twice — no dedup stage needed."""
     base = _with_plane_dots(embeddings, n_planes, dim).withColumn(
         "bucket", _bucket_col()
     )
@@ -250,7 +216,7 @@ def recall_vs_bruteforce(
 ) -> DataFrame:
     """Measure ANN recall@k against the exact baseline (the 'measure,
     don't guess' check for every approximate path). ``method='lsh'``
-    with ``n_probe > 1`` measures multi-probe LSH; ``method='ivf'``
+    measures LSH probing ``n_probe`` buckets per query; ``method='ivf'``
     measures the IVF index probing its ``n_probe`` closest cells
     (``n_planes`` is ignored there; ``n_cells``/``refine_iters``
     parameterise the quantizer)."""
@@ -278,14 +244,10 @@ def recall_vs_bruteforce(
             n_probe=n_probe,
             refine_iters=refine_iters,
         ).select("query_id", "neighbor_id")
-    elif n_probe > 1:
+    else:
         approx = topk_lsh_multiprobe(
             embeddings, query_ids, k, n_planes, n_probe
         ).select("query_id", "neighbor_id")
-    else:
-        approx = topk_lsh(embeddings, query_ids, k, n_planes).select(
-            "query_id", "neighbor_id"
-        )
     # ONE left join from exact onto approx, then a per-query sum: the
     # exact subtree appears once in the plan (a semi-join + separate
     # distinct-query-list referenced the brute-force top-k twice, and

@@ -181,33 +181,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# SimHash signatures
-# --------------------------------------------------------------------------
-@register(
-    "dedup_simhash",
-    sql=f"""
-    WITH norm AS ({_NORM}),
-    toks AS (SELECT doc_id,
-                    CAST(('0x' || substr(md5(unnest(string_split(t, ' '))), 1, 8))
-                         AS BIGINT) AS w0
-             FROM norm),
-    bits AS (SELECT doc_id, w0, b.bit FROM toks, unnest(generate_series(0, 15)) b(bit)),
-    votes AS (
-        SELECT doc_id, bit,
-               sum(CASE WHEN ((w0 >> bit) & 1) = 1 THEN 1 ELSE -1 END) AS vote
-        FROM bits GROUP BY doc_id, bit
-    )
-    SELECT doc_id,
-           CAST(sum(CASE WHEN vote > 0 THEN CAST(power(2, bit) AS BIGINT) ELSE 0 END)
-                AS BIGINT) AS simhash
-    FROM votes GROUP BY doc_id
-    """,
-)
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.simhash(load_table(spark, sf_dir, "documents"))
-
-
-# --------------------------------------------------------------------------
 # 64-bit SimHash (two 32-bit words; a signed long can't carry bit 63)
 # + band-sliced Hamming candidate pairs
 # --------------------------------------------------------------------------
@@ -1266,8 +1239,9 @@ def pipeline_pack_doc_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# LSH-bucketed approximate top-k — the md5-parity hyperplanes are
-# reproduced in SQL, so even the approximate path is hash-checked
+# LSH-bucketed approximate top-k (the multi-probe kernel at n_probe=1)
+# — the md5-parity hyperplanes are reproduced in SQL, so even the
+# approximate path is hash-checked
 # --------------------------------------------------------------------------
 _LSH_PLANES = 6
 
@@ -1310,8 +1284,9 @@ _LSH_PLANES = 6
 )
 def similarity_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.topk_lsh(
-        emb, F.col("vec_id") < _N_QUERIES, k=_TOPK_K, n_planes=_LSH_PLANES
+    return similarity.topk_lsh_multiprobe(
+        emb, F.col("vec_id") < _N_QUERIES, k=_TOPK_K, n_planes=_LSH_PLANES,
+        n_probe=1,
     )
 
 
@@ -3397,27 +3372,6 @@ def pipeline_corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
         min_df=_BP_MIN_DF,
         max_avg_nll=_CUR_NLL,
     )
-
-
-# --------------------------------------------------------------------------
-# star-algorithm CC twin of dedup_clusters: identical result (same
-# recursive-CTE oracle), different physical strategy (alternating
-# large/small-star re-keys by node id each round — no label-keyed join
-# to structurally skew on giant components).
-# --------------------------------------------------------------------------
-def _register_clusters_stars() -> None:
-    register("dedup_clusters_stars", sql=_ORACLE["dedup_clusters"])(
-        _dedup_clusters_stars
-    )
-
-
-def _dedup_clusters_stars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.jaccard_pairs(docs, threshold=0.5)
-    return dedup.connected_components_stars(pairs, check_every=2)
-
-
-_register_clusters_stars()
 
 
 # --------------------------------------------------------------------------

@@ -28,22 +28,26 @@ TABLES = ("predictions", "chains", "pae_long", "atoms")
 def ingest_corpus(
     spark: SparkSession, input_dir: str, table_root: str, n_buckets: int = 64
 ) -> dict[str, str]:
-    """Parse the file tree once; write the four engine tables."""
-    atoms = read_atoms(spark, input_dir)
-    dfs = {
-        "predictions": read_summary_confidences(spark, input_dir),
-        "chains": chains_from_atoms(atoms),
-        "pae_long": read_pae_long(spark, input_dir),
-        "atoms": atoms,
-    }
-    paths = {}
-    for name, df in dfs.items():
-        path = os.path.join(table_root, name)
+    """Parse the file tree once; write the four engine tables.
+
+    ``atoms`` is written first and ``chains`` is derived from the
+    written table, so each CIF is parsed exactly once."""
+    paths = {name: os.path.join(table_root, name) for name in TABLES}
+
+    def write(name: str, df) -> None:
         if name in _BUCKETED:
-            write_job_bucketed(df, path, n_buckets=min(n_buckets, _BUCKETED[name]))
+            write_job_bucketed(
+                df, paths[name], n_buckets=min(n_buckets, _BUCKETED[name])
+            )
         else:
-            df.write.mode("overwrite").option("compression", "zstd").parquet(path)
-        paths[name] = path
+            df.write.mode("overwrite").option("compression", "zstd").parquet(
+                paths[name]
+            )
+
+    write("atoms", read_atoms(spark, input_dir))
+    write("chains", chains_from_atoms(spark.read.parquet(paths["atoms"])))
+    write("predictions", read_summary_confidences(spark, input_dir))
+    write("pae_long", read_pae_long(spark, input_dir))
     return paths
 
 

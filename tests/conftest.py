@@ -80,7 +80,6 @@ SLOW_TESTS = {
     "test_multimodal_streaming.py::test_state_table_stays_compact_over_many_epochs",  # 17.7s
     "test_multimodal_streaming.py::test_watch_documents_doremi_matches_batch",  # 8.3s
     "test_randomized_differential.py::test_jaccard_prefix_filter_lossless_on_adversarial_docs",  # 9.2s
-    "test_randomized_differential.py::test_stars_cc_matches_pointer_doubling_random_graphs",  # 23.5s
     "test_round10_properties.py::test_ks_matches_bruteforce_cdf_sweep",  # 14.6s
     "test_round10_properties.py::test_ranking_matches_plain_treceval",  # 13.4s
     "test_round11_properties.py::test_chi2_many_matches_pure_python",  # 44.2s

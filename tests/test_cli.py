@@ -160,13 +160,17 @@ def test_ingest_then_query_from_tables(spark, tmp_path):
     out1 = str(tmp_path / "o4a")
     out2 = str(tmp_path / "o4b")
     write_file_corpus(corpus_dir, n_jobs=6, seed=12)
+    n_cif = sum(f.endswith(".cif") for _, _, fs in os.walk(corpus_dir) for f in fs)
     before = _persisted(spark)
+    since = _sql_executions(spark)
 
     r_ing = run(
         build_parser().parse_args(["-id", corpus_dir, "--ingest", tables]),
         spark=spark,
     )
     assert set(r_ing["tables"]) == {"predictions", "chains", "pae_long", "atoms"}
+    # each CIF parsed once: chains are derived from the written atoms
+    assert _files_read_under(spark, corpus_dir, since) == n_cif
     assert any(
         d.startswith("job_bucket=") for d in os.listdir(os.path.join(tables, "pae_long"))
     )

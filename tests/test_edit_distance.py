@@ -123,7 +123,7 @@ def test_edit_distance_plan_build_is_lazy(spark):
     """Explicit-mode plan construction fires NO Spark job (the r12
     min-length guard ran an eager .count() — one extra full corpus
     scan per CALL at plan-build time; the guard now rides the text
-    projection in-path, the topk_lsh pattern). mode='auto' is exempt:
+    projection in-path, the LSH plane-dot pattern). mode='auto' is exempt:
     its hot-gram gate probe is a documented plan-build action."""
     docs = spark.createDataFrame(
         [(1, "a" * 30), (2, "a" * 29 + "b")], "doc_id long, text string"

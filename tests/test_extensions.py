@@ -154,11 +154,9 @@ def test_lsh_candidates_cover_exact_dups(docs):
 
 
 def test_simhash_identical_for_dups(docs):
-    sh = {r.doc_id: r.simhash for r in dedup.simhash(docs).collect()}
+    sh = {r.doc_id: (r.sim_hi, r.sim_lo) for r in dedup.simhash64(docs).collect()}
     assert sh[0] == sh[1] == sh[2]
     assert sh[0] != sh[4]
-    groups = {r.keeper_doc_id: r.n_docs for r in dedup.simhash_dup_groups(docs).collect()}
-    assert groups.get(0, 0) >= 3
 
 
 def test_topk_bruteforce_and_lsh_recall(spark, sf_dir):
@@ -274,21 +272,27 @@ def test_embedding_near_dup_lsh_recall(spark, sf_dir):
 
 
 def test_topk_ivf_matches_exact_when_probing_all_cells(spark, sf_dir):
-    from pyspark.sql import functions as F
-
+    """Also pins that a Column ``query_ids`` may name any column of
+    ``embeddings``, not only ``vec_id``: the kernels filter their
+    (vec_id, vec) projection, and Spark resolves ``label`` through it
+    (47 label-1 vectors in sf0.001, so k=3 gives 141 rows)."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    exact = {
-        (r.query_id, r.neighbor_id, r.rk)
-        for r in similarity.topk_bruteforce(emb, F.col("vec_id") < 4, k=3).collect()
-    }
-    # probing every cell degrades IVF to exact search
-    full = {
-        (r.query_id, r.neighbor_id, r.rk)
-        for r in similarity.topk_ivf(
-            emb, F.col("vec_id") < 4, k=3, n_cells=8, n_probe=8
-        ).collect()
-    }
-    assert full == exact
+    for q in (F.col("vec_id") < 4, F.col("label") == 1):
+        n_queries = emb.filter(q).count()
+        exact = {
+            (r.query_id, r.neighbor_id, r.rk)
+            for r in similarity.topk_bruteforce(emb, q, k=3).collect()
+        }
+        assert len(exact) == 3 * n_queries
+        # probing every cell degrades IVF to exact search
+        full = {
+            (r.query_id, r.neighbor_id, r.rk)
+            for r in similarity.topk_ivf(
+                emb, q, k=3, n_cells=8, n_probe=8
+            ).collect()
+        }
+        assert full == exact
+        assert similarity.topk_lsh_multiprobe(emb, q, k=3).count() == len(exact)
 
 
 def test_lsh_bucket_plan_build_fires_no_spark_job(spark, sf_dir):
@@ -373,10 +377,9 @@ def test_simhash64_survives_collision_scale(spark):
         (i, " ".join(rng.sample(vocab, 12))) for i in range(10_000)
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    n16 = dedup.simhash(docs).select("simhash").distinct().count()
-    n64 = (
-        dedup.simhash64(docs).select("sim_hi", "sim_lo").distinct().count()
-    )
+    sig = dedup.simhash64(docs)
+    n16 = sig.select(F.col("sim_lo") % 65536).distinct().count()
+    n64 = sig.select("sim_hi", "sim_lo").distinct().count()
     assert n16 < 10_000  # 16-bit: collisions by pigeonhole/birthday
     assert n64 > n16
     assert n64 >= 9_990  # 64 bits: essentially collision-free here
@@ -695,9 +698,6 @@ def test_operators_handle_empty_corpus(spark):
         lambda: dedup.simhash64(empty),
         lambda: dedup.segment_dedup(empty),
         lambda: dedup.connected_components(
-            spark.createDataFrame([], "doc_a long, doc_b long")
-        ),
-        lambda: dedup.connected_components_stars(
             spark.createDataFrame([], "doc_a long, doc_b long")
         ),
         lambda: dedup.incremental_exact_dedup(

@@ -97,13 +97,18 @@ def _union_find_components(pairs: list[tuple[int, int]]) -> dict[int, int]:
 def test_connected_components_match_union_find_on_random_graphs(spark):
     """Pointer-doubling label propagation must agree with a sequential
     union-find on random graphs across densities — sparse forests,
-    chains and dense multi-component mixes."""
+    chains and dense multi-component mixes — and on a star and on
+    reversed pairs with a self-pair."""
+    cases = []
     for seed, n_nodes, n_edges in ((5, 60, 20), (23, 60, 60), (41, 40, 120)):
         rng = random.Random(seed)
-        pairs = [
+        cases.append([
             tuple(sorted(rng.sample(range(n_nodes), 2)))
             for _ in range(n_edges)
-        ]
+        ])
+    cases.append([(0, i) for i in range(1, 20)])
+    cases.append([(2, 1), (3, 2), (11, 10), (12, 12)])
+    for pairs in cases:
         df = spark.createDataFrame(
             [(a, b) for a, b in pairs], "doc_a long, doc_b long"
         )
@@ -111,7 +116,7 @@ def test_connected_components_match_union_find_on_random_graphs(spark):
             r.doc_id: r.cluster_id
             for r in dedup.connected_components(df).collect()
         }
-        assert got == _union_find_components(pairs), (seed, n_nodes, n_edges)
+        assert got == _union_find_components(pairs), pairs[:8]
 
 
 def test_jaccard_prefix_filter_lossless_on_adversarial_docs(spark):
@@ -189,46 +194,6 @@ def test_kmeans_matches_numpy_lloyd(spark):
     assert got == expect
     # every cluster is non-trivial on this data
     assert len(set(got.values())) > 1
-
-
-def test_stars_cc_matches_pointer_doubling_random_graphs(spark):
-    """large/small-star CC must produce the identical (node, min-label)
-    map as the pointer-doubling engine on random graphs of three
-    densities, plus the structured worst cases (chain, star, two
-    components)."""
-    import random
-
-    from process_alphafold3_outputs_spark.operators import dedup
-
-    cases = []
-    rng = random.Random(17)
-    for n, m in [(30, 15), (40, 60), (25, 120)]:
-        edges = [
-            (rng.randrange(n), rng.randrange(n)) for _ in range(m)
-        ]
-        cases.append(edges)
-    cases.append([(i, i + 1) for i in range(25)])          # path
-    cases.append([(0, i) for i in range(1, 20)])           # star
-    cases.append([(1, 2), (2, 3), (10, 11), (12, 12)])     # 2 comps + self
-
-    for edges in cases:
-        pairs = spark.createDataFrame(
-            [(a, b) for a, b in edges], "doc_a long, doc_b long"
-        )
-        a = {
-            (r["doc_id"], r["cluster_id"])
-            for r in dedup.connected_components(pairs).collect()
-        }
-        b = {
-            (r["doc_id"], r["cluster_id"])
-            # alternate the amortized stopping rule into the
-            # differential: extra rounds past the fixpoint must be
-            # no-ops (check_every coarsens ONLY when to stop)
-            for r in dedup.connected_components_stars(
-                pairs, check_every=1 + len(edges) % 3
-            ).collect()
-        }
-        assert a == b, f"mismatch on edges={edges[:8]}..."
 
 
 # --------------------------------------------------------------------------

@@ -17,21 +17,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from process_alphafold3_outputs_spark.plans import driver_queries as dq
-from process_alphafold3_outputs_spark.plans import driver_queries_af3  # noqa: F401
-from process_alphafold3_outputs_spark.plans import driver_queries_ext  # noqa: F401
-from process_alphafold3_outputs_spark.plans import driver_queries_files  # noqa: F401
-from process_alphafold3_outputs_spark.session import get_spark
+import bench  # noqa: E402  (registers every query family)
 
-
-def _release_persisted_rdds(spark) -> None:
-    jsc = spark.sparkContext._jsc.sc()
-    for rid in list(spark.sparkContext._jsc.getPersistentRDDs().keys()):
-        try:
-            jsc.unpersistRDD(rid, True)
-        except Exception:  # noqa: BLE001
-            pass
-    spark.catalog.clearCache()
+from process_alphafold3_outputs_spark.plans import driver_queries as dq  # noqa: E402
+from process_alphafold3_outputs_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
@@ -47,8 +36,8 @@ def main() -> None:
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             elapsed = time.perf_counter() - t0
+            bench._release_persisted_rdds(spark)
             spark.catalog.clearCache()
-            _release_persisted_rdds(spark)
             return elapsed
 
         runs = [one_run() for _ in range(n_runs)]

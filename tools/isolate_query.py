@@ -32,11 +32,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 os.environ.setdefault("SPARK_GRAFT_UI", "true")
 
-from process_alphafold3_outputs_spark.plans import driver_queries as dq
-from process_alphafold3_outputs_spark.plans import driver_queries_af3  # noqa: F401
-from process_alphafold3_outputs_spark.plans import driver_queries_ext  # noqa: F401
-from process_alphafold3_outputs_spark.plans import driver_queries_files  # noqa: F401
-from process_alphafold3_outputs_spark.session import get_spark
+import bench  # noqa: E402  (registers every query family)
+
+from process_alphafold3_outputs_spark.plans import driver_queries as dq  # noqa: E402
+from process_alphafold3_outputs_spark.session import get_spark  # noqa: E402
 
 
 def _api(spark, path: str):
@@ -46,16 +45,6 @@ def _api(spark, path: str):
     return json.load(
         urllib.request.urlopen(f"{ui}/api/v1/applications/{app_id}/{path}", timeout=15)
     )
-
-
-def _release_persisted_rdds(spark) -> None:
-    jsc = spark.sparkContext._jsc.sc()
-    for rid in list(spark.sparkContext._jsc.getPersistentRDDs().keys()):
-        try:
-            jsc.unpersistRDD(rid, True)
-        except Exception:  # noqa: BLE001
-            pass
-    spark.catalog.clearCache()
 
 
 def probe(spark, name: str, fn, suffix: str, runs: int, plans_dir: str) -> dict:
@@ -83,7 +72,8 @@ def probe(spark, name: str, fn, suffix: str, runs: int, plans_dir: str) -> dict:
     )
 
     action()  # warmup
-    _release_persisted_rdds(spark)
+    bench._release_persisted_rdds(spark)
+    spark.catalog.clearCache()
 
     jobs_before = {j["jobId"] for j in _api(spark, "jobs")}
     stages_before = {s["stageId"] for s in _api(spark, "stages")}
@@ -119,7 +109,8 @@ def probe(spark, name: str, fn, suffix: str, runs: int, plans_dir: str) -> dict:
                 "shuffle_read_b": sum(s.get("shuffleReadBytes", 0) for s in stages),
                 "top_stages": top,
             }
-        _release_persisted_rdds(spark)
+        bench._release_persisted_rdds(spark)
+    spark.catalog.clearCache()
 
     out = {
         "query": name,

@@ -32,7 +32,12 @@ from .operators.structures import (
     write_overlay_models,
 )
 from .params import ScreenParams
-from .plans.pipeline import compute_contacts, interaction_report, partner_islands
+from .plans.pipeline import (
+    compute_contacts,
+    interaction_report,
+    partner_islands,
+    save_report_csv,
+)
 from .session import get_spark
 from .sources.af3_json import read_pae_long, read_summary_confidences
 from .sources.cif import chains_from_atoms, read_atoms
@@ -61,11 +66,6 @@ def build_parser() -> argparse.ArgumentParser:
                    "side output for jobs passing the binder screen (the "
                    "reference's extract_pae_data runs inside the is_binder "
                    "branch, :567-575; --no-emit-pae-csv skips the extra I/O)")
-    p.add_argument("--distributed-csv", action="store_true",
-                   help="write the report via the distributed CSV sink "
-                   "(a directory of part files) instead of a single "
-                   "driver-assembled file — use when the report itself "
-                   "is too large to collect")
     p.add_argument("--write-log", action="store_true",
                    help="materialise the summary-read errors table to "
                    "{output-dir}/process_af3_outputs.log (the reference's "
@@ -170,19 +170,7 @@ def _screen(args, spark: SparkSession, params: ScreenParams, out_root: str) -> d
             chains = chains_from_atoms(atoms)
         contacts = _pin(compute_contacts(preds, chains, pae, atoms, params), pinned)
         report = interaction_report(preds, chains, pae, atoms, params, contacts=contacts)
-        if getattr(args, "distributed_csv", False):
-            from .plans.pipeline import write_report
-
-            csv_path = write_report(report, out_root, params)
-            n_rows = spark.read.option("header", True).csv(csv_path).count()
-        else:
-            # reference parity: ONE file with the exact reference name; the
-            # report is one row per binder island pair — small relative to
-            # the corpus. --distributed-csv switches to the parallel sink.
-            csv_path = os.path.join(out_root, params.csv_name())
-            pdf = report.toPandas()
-            pdf.to_csv(csv_path, index=False)
-            n_rows = len(pdf)
+        csv_path, n_rows = save_report_csv(report, out_root, params)
 
         result = {"csv": csv_path, "n_binders": binders.count(),
                   "n_report_rows": n_rows, "interaction_cifs": 0,

@@ -1292,73 +1292,15 @@ def mmr_rerank(
     few-shot example set) from filling up with near-duplicates of the
     top hit.
 
-    Scale shape: the corpus-sized work is the candidate generation —
-    one exact top-``n_candidates`` pass here (swap any ANN kernel
-    upstream at scale); the greedy loop then runs on the COLLECTED
-    candidate table, bounded at ``n_candidates`` rows by construction
-    (the bounded-collect pattern of ``fit_quality_classifier``).
-    Deterministic cross-engine: relevance and candidate pair-sims are
-    left-to-right double cosine folds rounded half-up to 6 dp, MMR
-    scores round to 9 dp, ties break on vec_id."""
-    from .text import round_half_up  # driver-side twin of F.round
-
-    cands_df = (
-        topk_bruteforce(
-            embeddings, F.col("vec_id") == query_id, k=n_candidates
-        )
-        .join(
-            embeddings.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("embedding").cast("array<double>").alias("v"),
-            ),
-            "neighbor_id",
-        )
-        .select("neighbor_id", "sim", "v")
-    )
-    cands = sorted(
-        ((int(r.neighbor_id), float(r.sim), list(r.v))
-         for r in cands_df.collect()),
-        key=lambda t: t[0],
-    )
-
-    def _dot(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc += x * y
-        return acc
-
-    import math
-
-    def _cos6(a, b):
-        return round_half_up(
-            _dot(a, b) / (math.sqrt(_dot(a, a)) * math.sqrt(_dot(b, b))), 6
-        )
-
-    vecs = {i: v for i, _, v in cands}
-    rel = {i: s for i, s, _ in cands}
-    remaining = [i for i, _, _ in cands]
-    picked: list[tuple[int, int, float, float]] = []
-    while remaining and len(picked) < k:
-        best = None
-        for i in remaining:
-            maxsim = max(
-                (_cos6(vecs[i], vecs[j]) for _, j, _, _ in picked),
-                default=0.0,
-            )
-            score = round_half_up(
-                lam * rel[i] - (1.0 - lam) * maxsim, 9
-            )
-            # argmax with vec_id tiebreak (smaller id wins)
-            if best is None or score > best[1] or (
-                score == best[1] and i < best[0]
-            ):
-                best = (i, score)
-        picked.append((len(picked) + 1, best[0], rel[best[0]], best[1]))
-        remaining.remove(best[0])
-    spark = embeddings.sparkSession
-    return spark.createDataFrame(
-        picked, "rk int, vec_id long, relevance double, mmr_score double"
-    )
+    The one-query call of :func:`mmr_rerank_many` (candidates: the
+    exact top-``n_candidates`` of the embeddings row ``query_id``)."""
+    return mmr_rerank_many(
+        embeddings,
+        F.col("vec_id") == query_id,
+        k=k,
+        n_candidates=n_candidates,
+        lam=lam,
+    ).drop("query_id")
 
 
 def mmr_rerank_many(
@@ -1372,9 +1314,13 @@ def mmr_rerank_many(
     form of :func:`mmr_rerank` (the serving shape, like
     ``hybrid_search_many``): candidate generation for ALL queries is
     one corpus pass (``topk_bruteforce`` already fans a broadcast
-    query table out), then the greedy selection runs per query on the
-    collected candidate block — bounded at queries × ``n_candidates``
-    rows. Same determinism contract as the single-query form."""
+    query table out — swap any ANN kernel upstream at scale), then the
+    greedy selection runs per query on the COLLECTED candidate block,
+    bounded at queries × ``n_candidates`` rows by construction (the
+    bounded-collect pattern of ``fit_quality_classifier``).
+    Deterministic cross-engine: relevance and candidate pair-sims are
+    left-to-right double cosine folds rounded half-up to 6 dp, MMR
+    scores round to 9 dp, ties break on vec_id."""
     from .text import round_half_up
 
     cands_df = (

@@ -1681,6 +1681,17 @@ def ngram_novelty(
     )
 
 
+def _one_query(spark, query_id: int, terms: list[str]) -> DataFrame:
+    """The (query_id, term) table of ONE query for the ``*_many``
+    kernels: one row per distinct term, or a single (query_id, NULL)
+    row when there are no terms — a NULL term matches no posting, so
+    the query still exists for the vector side of a hybrid search."""
+    return spark.createDataFrame(
+        [(query_id, t) for t in sorted(set(terms))] or [(query_id, None)],
+        "query_id long, term string",
+    )
+
+
 def bm25_search(
     docs: DataFrame,
     query_terms: list[str],
@@ -1693,64 +1704,15 @@ def bm25_search(
     query terms under Okapi BM25 (the standard lexical ranking
     function): ``Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1−b+b·|d|/avgdl))``
     with the Robertson idf ``ln(1 + (N−df+0.5)/(df+0.5))`` (always
-    positive). Terms are matched against the normalized token stream.
+    positive). Terms are matched against the normalized token stream;
+    repeated terms count once.
 
-    Scale shape: doc lengths and per-(doc, query-term) tfs come from
-    one corpus pass (the tf filter keeps only query terms — the
-    explode collapses immediately); df and avgdl are tiny broadcast
-    aggregates. Scores fold in term order and round to 9 dp BEFORE
-    ranking (the ln-in-rank-key policy); the top-k is
-    TakeOrderedAndProject."""
-    terms = sorted(set(query_terms))
-    d = normalized(spread(docs, "doc_id"), text_col).withColumn(
-        "_toks", F.split("_norm", " ")
-    )
-    lens = d.select("doc_id", F.size("_toks").cast("long").alias("_dl"))
-    tok = d.select("doc_id", F.explode("_toks").alias("term")).filter(
-        F.col("term").isin(terms)
-    )
-    tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("_tf"))
-    dfq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("_df"))
-    stats = lens.agg(
-        F.count(F.lit(1)).alias("_n"), F.avg("_dl").alias("_avgdl")
-    )
-    scored = (
-        tf.join(F.broadcast(dfq), "term")
-        .join(lens, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "_s",
-            F.log(
-                1.0
-                + (F.col("_n") - F.col("_df") + 0.5) / (F.col("_df") + 0.5)
-            )
-            * (F.col("_tf") * (k1 + 1))
-            / (
-                F.col("_tf")
-                + F.lit(k1)
-                * (1 - b + F.lit(b) * F.col("_dl") / F.col("_avgdl"))
-            ),
-        )
-    )
-    per_doc = scored.groupBy("doc_id").agg(
-        F.round(
-            F.aggregate(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("term", "_s"))),
-                    lambda s: s["_s"],
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            9,
-        ).alias("score")
-    )
-    w = Window.orderBy(F.col("score").desc(), "doc_id")
+    The one-query call of :func:`bm25_search_many`, in rank order."""
+    q = _one_query(docs.sparkSession, 0, query_terms)
     return (
-        per_doc.orderBy(F.col("score").desc(), "doc_id")
-        .limit(k)
-        .withColumn("rk", F.row_number().over(w))
-        .select("doc_id", "score", "rk")
+        bm25_search_many(docs, q, k=k, k1=k1, b=b, text_col=text_col)
+        .drop("query_id")
+        .orderBy("rk")
     )
 
 
@@ -1765,13 +1727,14 @@ def bm25_search_many(
     """(query_id, doc_id, score, rk) — BM25 top-k for a whole TABLE of
     queries at once (``queries``: (query_id, term) rows — the batch
     evaluation/serving shape; :func:`bm25_search` is its single-query
-    special case). The corpus is scanned ONCE for all queries: the
-    token stream semi-joins the distinct query-term set, tf/df build
-    per matched term, and each query's scoring join fans out only over
-    its own terms' postings.
+    call). The corpus is scanned ONCE for all queries: the token stream
+    semi-joins the distinct query-term set, tf/df build per matched
+    term (df and avgdl are tiny broadcast aggregates), and each query's
+    scoring join fans out only over its own terms' postings.
 
-    Same determinism policy as bm25_search: term-ordered fold, 9-dp
-    rounding before the per-query rank window."""
+    Deterministic cross-engine: scores fold in term order and round to
+    9 dp BEFORE the per-query rank window (the ln-in-rank-key
+    policy)."""
     d = normalized(spread(docs, "doc_id"), text_col).withColumn(
         "_toks", F.split("_norm", " ")
     )
@@ -2858,52 +2821,16 @@ def hybrid_search_rrf(
     them without score calibration (ranks only — the two scorers'
     scales never meet).
 
-    Scale shape: both input lists are top-``k_each`` results — bounded
-    tables from their own scale-safe kernels (:func:`bm25_search`'s
-    one-corpus-pass TakeOrdered; brute-force or ANN top-k on the
-    vector side); the fusion itself is a full-outer join of two ≤
-    ``k_each``-row tables + one TakeOrdered — driver-scale work no
-    matter the corpus size. Missing-from-one-list docs contribute only
-    the present list's reciprocal (standard RRF). Fused score rounds
-    to 9 dp before ranking (cross-engine rational arithmetic); ties
-    break on doc_id."""
-    from . import similarity
-
-    lex = bm25_search(docs, query_terms, k=k_each, text_col=text_col).select(
-        "doc_id", F.col("rk").alias("lex_rank")
-    )
-    vec = (
-        similarity.topk_bruteforce(
-            embeddings, F.col("vec_id") == query_vec_id, k=k_each
-        )
-        .select(
-            F.col("neighbor_id").alias("doc_id"),
-            F.col("rk").alias("vec_rank"),
-        )
-    )
-    fused = (
-        lex.join(vec, "doc_id", "full_outer")
-        .withColumn(
-            "rrf_score",
-            F.round(
-                F.coalesce(1.0 / (F.lit(c) + F.col("lex_rank")), F.lit(0.0))
-                + F.coalesce(1.0 / (F.lit(c) + F.col("vec_rank")), F.lit(0.0)),
-                9,
-            ),
-        )
-    )
-    w = Window.orderBy(F.col("rrf_score").desc(), "doc_id")
+    The one-query call of :func:`hybrid_search_many` (the query vector
+    is the embeddings row ``query_vec_id``), in rank order. An empty
+    ``query_terms`` gives the vector-only ranking."""
+    q = _one_query(docs.sparkSession, query_vec_id, query_terms)
     return (
-        fused.orderBy(F.col("rrf_score").desc(), "doc_id")
-        .limit(k)
-        .withColumn("rk", F.row_number().over(w))
-        .select(
-            "doc_id",
-            "rrf_score",
-            F.col("lex_rank").cast("int").alias("lex_rank"),
-            F.col("vec_rank").cast("int").alias("vec_rank"),
-            "rk",
+        hybrid_search_many(
+            docs, embeddings, q, k=k, k_each=k_each, c=c, text_col=text_col
         )
+        .drop("query_id")
+        .orderBy("rk")
     )
 
 
@@ -2929,8 +2856,10 @@ def hybrid_search_many(
     (broadcast query block inside ``topk_bruteforce`` — swap in an ANN
     kernel at corpus scale); the fusion joins two
     (n_queries × k_each)-row tables on (query_id, doc_id) and ranks
-    per query. Single-query parity with :func:`hybrid_search_rrf` is
-    pytest-pinned."""
+    per query. Missing-from-one-list docs contribute only the present
+    list's reciprocal (standard RRF). The fused score rounds to 9 dp
+    before ranking (cross-engine rational arithmetic); ties break on
+    doc_id."""
     from . import similarity
 
     lex = bm25_search_many(docs, queries, k=k_each, text_col=text_col).select(

@@ -73,42 +73,6 @@ def two_phase_agg(df, keys: list[str], value_col: str, n_salts: int = 16):
     )
 
 
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    n_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join with the hot-key salting pattern: the BIG side gets a
-    deterministic per-row salt (hash of all its columns mod n_salts —
-    never rand(): a retried task must re-derive the same salt), the
-    SMALL side is replicated ×``n_salts``, and the join key becomes
-    (key, salt) — a single hot key now spreads over ``n_salts``
-    reducers instead of one straggler task.
-
-    Result equals ``big.join(small, key, how)`` exactly (pytest-pinned).
-    Use when AQE's skew-join split can't help — e.g. the skew is in a
-    single key of a shuffled join whose partitions can't be subdivided
-    further, or the join feeds a downstream stage that must stay
-    partitioned by (key, salt). For a small side that fits in memory,
-    plain ``broadcast(small)`` is still the first choice; salting is
-    the fallback when it doesn't. Supports 'inner' and 'left' (the
-    shapes where per-row replication semantics are sound).
-    """
-    from pyspark.sql import functions as F
-
-    if how not in ("inner", "left"):
-        raise ValueError(f"salted_join supports inner/left, got {how!r}")
-    salt = F.pmod(F.hash(*[F.col(c) for c in big.columns]), F.lit(n_salts))
-    b = big.withColumn("_salt", salt)
-    s = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    out = b.join(s, [key, "_salt"], how)
-    return out.drop("_salt")
-
-
 def skew_salted_join(
     big: "DataFrame",
     small: "DataFrame",

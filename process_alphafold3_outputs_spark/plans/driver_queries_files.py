@@ -24,6 +24,7 @@ fixture `tests/test_sources.py` exercises).
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -223,17 +224,20 @@ def _tree_pipeline_tables(spark: SparkSession) -> dict[str, DataFrame]:
     """,
 )
 def file_sink_report_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full file→file run: AF3 tree in, reference-named CSV out
-    (:304-318), then the WRITTEN CSV is re-read and returned — the
+    """Full file→file run: AF3 tree in, the CLI's reference-named CSV
+    out (:304-318), then the WRITTEN file is re-read and returned — the
     oracle restates the whole pipeline in SQL, so a wrong row in the
     file fails the hash."""
-    from .pipeline import interaction_report, write_report
+    from .pipeline import interaction_report, save_report_csv
 
     t = _tree_pipeline_tables(spark)
     report = interaction_report(
         t["predictions"], t["chains"], t["pae_long"], t["atoms"], PARAMS
     )
-    path = write_report(report, os.path.join(OUT_DIR, "report"), PARAMS)
+    out = os.path.join(OUT_DIR, "report")
+    shutil.rmtree(out, ignore_errors=True)
+    os.makedirs(out)
+    path, _ = save_report_csv(report, out, PARAMS)
     return spark.read.option("header", True).csv(path)
 
 
@@ -417,7 +421,7 @@ def file_sink_pymol_scripts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# O15 side-sink — per-job PAE CSV (partitioned CSV sink), re-read
+# O15 side-sink — the per-job PAE matrix CSVs the CLI writes, re-read
 # ---------------------------------------------------------------------------
 @register(
     "file_sink_pae_csv",
@@ -428,20 +432,43 @@ def file_sink_pymol_scripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def file_sink_pae_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's unconditional ``{stem}_pae.csv`` side output
-    (:115-116) as a job-partitioned CSV sink; the written files are
-    re-read and must reproduce the full long-form matrix."""
-    from ..sources.af3_json import read_pae_long, write_pae_csv
+    """The reference's ``{stem}_pae.csv`` side output (:115-116) through
+    the CLI's sink, ``write_pae_matrix_csvs``, for every job; each
+    written ``{job}/{job}_full_data_0_pae.csv`` matrix is read back to
+    (job, scored_token, aligned_token, pae) — row index, header column
+    — and must reproduce the full long-form matrix."""
+    from ..sources.af3_json import read_pae_long, write_pae_matrix_csvs
 
-    pae = read_pae_long(spark, TREE_DIR)
     out = os.path.join(OUT_DIR, "pae_csv")
-    write_pae_csv(pae, out)
-    back = spark.read.option("header", True).csv(out)
-    return back.select(
-        F.col("job").cast("string").alias("job"),
-        F.col("scored_token").cast("int").alias("scored_token"),
-        F.col("aligned_token").cast("int").alias("aligned_token"),
-        F.round(F.col("pae").cast("double"), 2).alias("pae"),
+    shutil.rmtree(out, ignore_errors=True)
+    write_pae_matrix_csvs(read_pae_long(spark, TREE_DIR), out).count()
+    files = spark.read.text(
+        os.path.join(out, "*", "*_full_data_0_pae.csv"), wholetext=True
+    )
+    lines = files.select(
+        F.regexp_extract(
+            "_metadata.file_name", r"^(.*)_full_data_0_pae\.csv$", 1
+        ).alias("job"),
+        F.split(F.regexp_replace("value", r"\s+$", ""), "\n").alias("_lines"),
+    )
+    rows = lines.select(
+        "job",
+        F.split(F.element_at("_lines", 1), ",").alias("_header"),
+        F.posexplode("_lines").alias("_row", "_line"),
+    ).filter(F.col("_row") > 0)
+    cells = rows.select(
+        "job",
+        "_row",
+        "_header",
+        F.posexplode(F.split("_line", ",")).alias("_col", "_cell"),
+    ).filter(F.col("_cell") != "")
+    return cells.select(
+        "job",
+        (F.col("_row") - 1).cast("int").alias("scored_token"),
+        F.element_at("_header", F.col("_col") + 1).cast("int").alias(
+            "aligned_token"
+        ),
+        F.round(F.col("_cell").cast("double"), 2).alias("pae"),
     )
 
 

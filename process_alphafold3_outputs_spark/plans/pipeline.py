@@ -31,6 +31,8 @@ later island window and aggregate reuses.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 
 from ..operators.intervals import KERNEL, bounds_fragment, kernel_args, with_sequence
@@ -193,8 +195,14 @@ def interaction_report(
     return report.toDF(*params.report_columns())
 
 
-def write_report(report: DataFrame, out_dir: str, params: ScreenParams) -> str:
-    """O29: parameterised CSV sink (process_af3_outputs.py:304-318)."""
-    path = f"{out_dir}/{params.csv_name()}"
-    report.write.mode("overwrite").option("header", True).csv(path)
-    return path
+def save_report_csv(
+    report: DataFrame, out_dir: str, params: ScreenParams
+) -> tuple[str, int]:
+    """O29: the report as ONE file with the reference's name
+    (process_af3_outputs.py:304-318), so a drop-in user diffing output
+    trees sees the same file; the report is one row per binder island
+    pair, small relative to the corpus. Returns (path, n_rows)."""
+    path = os.path.join(out_dir, params.csv_name())
+    pdf = report.toPandas()
+    pdf.to_csv(path, index=False)
+    return path, len(pdf)

@@ -233,18 +233,6 @@ def read_pae_long(spark: SparkSession, input_dir: str) -> DataFrame:
     )
 
 
-def write_pae_csv(pae_long: DataFrame, out_dir: str) -> None:
-    """O15 side-sink (``{stem}_pae.csv`` per job, :115-116) — opt-in in
-    our engine (reference inefficiency I3: unconditional write)."""
-    (
-        pae_long.repartition("job")
-        .write.mode("overwrite")
-        .partitionBy("job")
-        .option("header", True)
-        .csv(out_dir)
-    )
-
-
 def write_pae_matrix_csvs(pae_long: DataFrame, out_root: str) -> DataFrame:
     """Reference-exact O15 side-sink (:115-116): per job, the N×N PAE
     matrix as ``{out_root}/{job}/{job}_full_data_0_pae.csv`` — the same

@@ -266,41 +266,6 @@ def test_cli_write_log_materialises_errors(spark, tmp_path):
     assert "ERROR - Invalid JSON" in text
 
 
-def test_cli_distributed_csv_sink(spark, tmp_path):
-    """--distributed-csv writes the parallel directory sink with the
-    reference name; rows match the single-file path exactly."""
-    corpus_dir = str(tmp_path / "c7")
-    write_file_corpus(corpus_dir, n_jobs=5, seed=6)
-    out_a = str(tmp_path / "o7a")
-    out_b = str(tmp_path / "o7b")
-    r1 = run(
-        build_parser().parse_args(
-            ["-id", corpus_dir, "--output-dir", out_a, "--skip-structures",
-             "--no-emit-pae-csv"]
-        ),
-        spark=spark,
-    )
-    r2 = run(
-        build_parser().parse_args(
-            ["-id", corpus_dir, "--output-dir", out_b, "--skip-structures",
-             "--no-emit-pae-csv", "--distributed-csv"]
-        ),
-        spark=spark,
-    )
-    assert os.path.isfile(r1["csv"]) and os.path.isdir(r2["csv"])
-    assert r1["n_report_rows"] == r2["n_report_rows"] > 0
-    import pandas as pd
-
-    a = pd.read_csv(r1["csv"]).sort_values("Folder_name").reset_index(drop=True)
-    b = (
-        spark.read.option("header", True).csv(r2["csv"])
-        .toPandas()
-        .sort_values("Folder_name")
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(a.astype(str), b.astype(str))
-
-
 # --------------------------------------------------------------------------
 # corpus curation CLI
 # --------------------------------------------------------------------------

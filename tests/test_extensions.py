@@ -623,60 +623,6 @@ def test_approx_percentiles_bounded_rank_error(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# salted join
-# --------------------------------------------------------------------------
-
-
-def test_salted_join_equals_plain_join(spark, sf_dir):
-    from process_alphafold3_outputs_spark.operators.util import salted_join
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_partkey", "l_quantity"
-    )
-    pt = spark.read.parquet(f"{sf_dir}/part.parquet").select(
-        "p_partkey", "p_name"
-    ).withColumnRenamed("p_partkey", "l_partkey")
-    plain = li.join(pt, "l_partkey").orderBy("l_orderkey", "l_partkey", "l_quantity")
-    salted = salted_join(li, pt, "l_partkey", n_salts=8).orderBy(
-        "l_orderkey", "l_partkey", "l_quantity"
-    )
-    assert plain.collect() == salted.collect()
-
-
-def test_salted_join_left_keeps_unmatched(spark):
-    from process_alphafold3_outputs_spark.operators.util import salted_join
-
-    big = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "k long, v string")
-    small = spark.createDataFrame([(1, "X")], "k long, w string")
-    got = {
-        (r["k"], r["w"]) for r in salted_join(big, small, "k", 4, "left").collect()
-    }
-    assert got == {(1, "X"), (2, None), (3, None)}
-
-
-def test_salted_join_spreads_hot_key(spark):
-    """The physical point: rows of ONE hot key land in multiple
-    partitions of the joined result when partitioned by (key, salt)."""
-    from pyspark.sql import functions as F
-
-    from process_alphafold3_outputs_spark.operators.util import salted_join
-
-    big = spark.createDataFrame(
-        [(1, i) for i in range(400)] + [(2, 0)], "k long, payload long"
-    )
-    small = spark.createDataFrame([(1, "hot"), (2, "cold")], "k long, w string")
-    out = salted_join(big, small, "k", n_salts=8)
-    # re-derive the salt the operator used and check the hot key uses >1
-    salts = (
-        big.withColumn("_s", F.pmod(F.hash("k", "payload"), F.lit(8)))
-        .filter(F.col("k") == 1)
-        .select("_s").distinct().count()
-    )
-    assert salts > 1
-    assert out.count() == 401
-
-
-# --------------------------------------------------------------------------
 # empty-input robustness
 # --------------------------------------------------------------------------
 
@@ -1522,6 +1468,36 @@ def test_hybrid_rrf_fuses_both_lists(spark):
     assert out[0].doc_id == 1 and out[0].rk == 1
 
 
+def test_hybrid_rrf_empty_terms_is_vector_only(spark):
+    """No query terms: no lexical list, so the fused ranking is the
+    vector list alone, each doc scoring 1/(c + vec_rank)."""
+    from pyspark.sql import functions as F
+    from process_alphafold3_outputs_spark.operators import similarity
+    from process_alphafold3_outputs_spark.operators.text import (
+        hybrid_search_rrf,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "spark shuffle"), (2, "query engine"), (3, "nothing here")],
+        "doc_id long, text string",
+    )
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.1]), (2, [-1.0, 0.5]), (3, [0.9, 0.2]), (9, [1.0, 0.0])],
+        "vec_id long, embedding array<float>",
+    )
+    out = hybrid_search_rrf(
+        docs, emb, [], query_vec_id=9, k=5, k_each=3, c=60
+    ).collect()
+    vec = similarity.topk_bruteforce(
+        emb, F.col("vec_id") == 9, k=3
+    ).orderBy("rk").collect()
+    assert [(r.doc_id, r.vec_rank, r.rk) for r in out] == [
+        (v.neighbor_id, v.rk, v.rk) for v in vec
+    ]
+    assert all(r.lex_rank is None for r in out)
+    assert all(abs(r.rrf_score - 1.0 / (60 + r.vec_rank)) < 1e-9 for r in out)
+
+
 def test_round8_operators_handle_empty_corpus(spark):
     """Empty-shipment sweep for the round-8 additions: plan, return 0
     rows, never raise."""
@@ -1643,9 +1619,9 @@ def test_auto_gate_resolved_plan_is_explicit_plan(spark):
 
 
 def test_hybrid_many_matches_single_per_query(spark):
-    """The batched hybrid form must reproduce the single-query form
-    exactly, per query (the bm25 single==many pin, lifted to the
-    fused output)."""
+    """A query's rows in a two-query table equal that query run alone
+    (the other query shares a lexical term and a vector neighbour), and
+    the single form keeps rank order."""
     from process_alphafold3_outputs_spark.operators.text import (
         hybrid_search_many,
         hybrid_search_rrf,
@@ -1670,17 +1646,18 @@ def test_hybrid_many_matches_single_per_query(spark):
         "vec_id long, embedding array<float>",
     )
     q = spark.createDataFrame(
-        [(3, "spark"), (3, "query"), (7, "data")],
+        [(3, "spark"), (3, "query"), (7, "data"), (7, "spark")],
         "query_id int, term string",
     )
     many = {
         (r.query_id, r.doc_id): (r.rrf_score, r.lex_rank, r.vec_rank, r.rk)
         for r in hybrid_search_many(docs, emb, q, k=4, k_each=3).collect()
     }
-    for qid, terms in ((3, ["spark", "query"]), (7, ["data"])):
+    for qid, terms in ((3, ["spark", "query"]), (7, ["data", "spark"])):
         single = hybrid_search_rrf(
             docs, emb, terms, query_vec_id=qid, k=4, k_each=3
         ).collect()
+        assert [r.rk for r in single] == list(range(1, len(single) + 1))
         for r in single:
             assert many[(qid, r.doc_id)] == (
                 r.rrf_score, r.lex_rank, r.vec_rank, r.rk
@@ -1902,8 +1879,9 @@ def test_check_expectations_counts_each_violation_kind(spark):
 
 
 def test_mmr_many_matches_single_per_query(spark):
-    """The batched form returns exactly the single-query greedy result
-    for each of its queries (same candidates, same tiebreaks)."""
+    """A query's rows in a multi-query table equal that query run
+    alone: the queries' candidate sets overlap, and each greedy pass
+    reads only its own query's candidates."""
     from process_alphafold3_outputs_spark.operators import similarity
 
     emb = spark.createDataFrame(

@@ -155,6 +155,47 @@ def test_skew_salted_join_rejects_outer(spark):
         skew_salted_join(df, df, ["k"], how="right")
 
 
+def test_skew_salted_join_spreads_hot_key(spark):
+    """The physical point: the join shuffles on (key, salt), so ONE hot
+    key's rows land in several reduce partitions, where the plain
+    sort-merge join puts them all in one."""
+    from process_alphafold3_outputs_spark.operators.util import (
+        skew_salted_join,
+    )
+
+    big = spark.createDataFrame(
+        [(1, i) for i in range(400)] + [(2, 0)], "k long, payload long"
+    )
+    small = spark.createDataFrame([(1, "hot"), (2, "cold")], "k long, w string")
+
+    def hot_partitions(df):
+        return (
+            df.filter(F.col("k") == 1)
+            .select(F.spark_partition_id().alias("p"))
+            .distinct()
+            .count()
+        )
+
+    # a shuffled join with a fixed partition count: no broadcast, and no
+    # AQE coalescing of the tiny reduce partitions into one
+    confs = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": "8",
+    }
+    old = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        salted = skew_salted_join(big, small, ["k"], n_salts=8)
+        assert hot_partitions(big.join(small, "k")) == 1
+        assert hot_partitions(salted) > 1
+        assert salted.count() == 401
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
 def test_null_values_excluded_from_binning(spark):
     # ADVICE r6 (low): NULLs previously landed in a NULL bin that
     # still counted toward `total` (skewed estimates) and sorted

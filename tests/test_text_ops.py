@@ -1241,19 +1241,25 @@ def test_bm25_ranks_exact_match_first(spark):
 
 
 def test_bm25_many_matches_single_query(spark):
+    """A query's rows in a two-query table equal that query run alone:
+    the other query's terms (one of them shared) change neither its df
+    nor its scores nor its ranks."""
     docs = _docs(spark, [
         (1, "spark shuffle spark shuffle query plan"),
         (2, "spark only here with many other filler words present today"),
         (3, "query query join window merge sort"),
     ])
     q = spark.createDataFrame(
-        [(7, "spark"), (7, "shuffle")], "query_id int, term string"
+        [(7, "spark"), (7, "shuffle"), (8, "shuffle"), (8, "join")],
+        "query_id int, term string",
     )
     many = {(r.query_id, r.doc_id): (r.score, r.rk)
             for r in text.bm25_search_many(docs, q, k=3).collect()}
-    single = {r.doc_id: (r.score, r.rk)
-              for r in text.bm25_search(docs, ["spark", "shuffle"], k=3).collect()}
-    assert {d: v for (qq, d), v in many.items() if qq == 7} == single
+    for qid, terms in ((7, ["spark", "shuffle"]), (8, ["shuffle", "join"])):
+        alone = {r.doc_id: (r.score, r.rk)
+                 for r in text.bm25_search(docs, terms, k=3).collect()}
+        assert alone
+        assert {d: v for (qq, d), v in many.items() if qq == qid} == alone
 
 
 def test_keyword_contexts_windows_and_edges(spark):

@@ -1780,6 +1780,8 @@ def run(args: argparse.Namespace, spark: SparkSession | None = None) -> dict:
     owns = spark is None
     spark = spark or get_spark("corpus-cli")
     handles: list = []
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    pinned_before = set(rdds().keySet().toArray())
     try:
         out = _result(args, spark, handles=handles)
         if args.command == "interleave":
@@ -1796,9 +1798,17 @@ def run(args: argparse.Namespace, spark: SparkSession | None = None) -> dict:
         return {"command": args.command, "rows": n, "out": args.out}
     finally:
         # release operator-staged blocks now the output is on disk —
-        # run() may be called many times against a borrowed session
+        # run() may be called many times against a borrowed session.
+        # unpersist() also drops the handles' catalog cache entries;
+        # the RDD sweep then frees what kernels localCheckpoint()ed,
+        # leaving blocks pinned before the run untouched.
         for h in handles:
             h.unpersist()
+        pinned = rdds()
+        for rid in set(pinned.keySet().toArray()) - pinned_before:
+            jrdd = pinned.get(rid)
+            if jrdd is not None:
+                jrdd.unpersist(False)
         if owns:
             spark.stop()
 

@@ -18,7 +18,7 @@ keeps ALL heavy state executor-side:
   one narrow array-fold projection applying the merge. No shuffle in
   the apply step.
 - **Lineage truncation**: the symbol column grows one `aggregate`
-  fold per merge; `localCheckpoint` every ``checkpoint_every`` merges
+  fold per merge; `localCheckpoint` every ``_CKPT_ROUNDS`` rounds
   keeps the plan flat (same policy as the iterative CC kernels — on
   a real cluster use reliable checkpointing).
 
@@ -129,13 +129,17 @@ def _select_non_interacting(
 #: the expression tree itself becomes the cost)
 _ADAPT_START, _ADAPT_CAP = 8, 128
 
+#: lineage truncation cadence: the vocabulary is localCheckpointed after
+#: every ``_CKPT_ROUNDS`` rounds' worth of merges (in merges applied,
+#: ``_CKPT_ROUNDS * batch``), bounding the fold depth of the plan
+_CKPT_ROUNDS = 4
+
 
 def train_bpe(
     docs: DataFrame,
     n_merges: int = 32,
     text_col: str = "text",
     min_pair_count: int = 2,
-    checkpoint_every: int = 4,
     batch_merges: int | str = 1,
 ) -> DataFrame:
     """Learned merge table (MERGES_SCHEMA), rank-ordered. Stops early
@@ -178,7 +182,7 @@ def train_bpe(
     # checkpoint cadence in MERGES: reproduces the historical
     # rounds-based placement exactly for integer batches (4 rounds x
     # batch merges) and bounds the adaptive fold depth per checkpoint
-    ckpt_merges = checkpoint_every * cur
+    ckpt_merges = _CKPT_ROUNDS * cur
     merges: list[tuple[int, str, str, str, int]] = []
     since_ckpt = 0
     while len(merges) < n_merges:

@@ -315,7 +315,6 @@ def pairwise_cluster_eval(
     df: DataFrame,
     pred_col: str,
     truth_col: str,
-    checkpoint_joint: bool = True,
 ) -> DataFrame:
     """One row (n_items, pred_clusters, truth_clusters, tp, fp, fn,
     precision, recall, f1, ari) — PAIRWISE evaluation of a predicted
@@ -344,10 +343,9 @@ def pairwise_cluster_eval(
 
     Scale shape: ONE groupBy(pred, truth) collapses the corpus; both
     margins and every statistic aggregate that cluster-pair-sized
-    table. ``checkpoint_joint`` (default True) materializes it once
-    (``localCheckpoint`` — EAGER at call time, the README
-    localCheckpoint-contract trade); False keeps the plan fully lazy
-    at the price of three scans."""
+    table, which is materialized once (``localCheckpoint`` — EAGER at
+    call time, the README localCheckpoint contract) so the input is
+    scanned once, not three times."""
     p = F.col(pred_col).cast("string")
     t = F.col(truth_col).cast("string")
     joint = (
@@ -355,8 +353,7 @@ def pairwise_cluster_eval(
         .groupBy(p.alias("_p"), t.alias("_t"))
         .agg(F.count(F.lit(1)).alias("_m"))
     )
-    if checkpoint_joint:
-        joint = joint.localCheckpoint()
+    joint = joint.localCheckpoint()
 
     def c2(col: Column) -> Column:
         # m(m−1) is even, so >> 1 IS the exact integer half (a double

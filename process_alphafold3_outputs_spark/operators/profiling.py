@@ -700,7 +700,6 @@ def mutual_information(
     df: DataFrame,
     col_a: str,
     col_b: str,
-    checkpoint_joint: bool = True,
 ) -> DataFrame:
     """One row (n, h_a, h_b, h_ab, mi, nmi) — Shannon entropies and
     the mutual information of two categorical columns: the dependency
@@ -720,14 +719,13 @@ def mutual_information(
     double drift is ~1e-16·terms, five orders below the 5e-7 rounding
     threshold). Scale shape: ONE groupBy(a, b) shuffle (group count =
     |A|·|B| — the label-statistic contract, same as agreement_kappa);
-    margins and entropy sums aggregate the category-sized table.
-    ``checkpoint_joint`` (default True) materializes the joint counts
-    once (``localCheckpoint``, the time_bucket_gapfill discipline) so
-    the three downstream entropy aggregations read the category-sized
-    table instead of each re-running the corpus groupBy — the raw
-    input is scanned exactly ONCE; False keeps the plan fully lazy at
-    the price of three scans."""
-    staged = _entropy_sums(df, col_a, col_b, checkpoint_joint)
+    margins and entropy sums aggregate the category-sized table. The
+    joint counts are materialized once (``localCheckpoint``, the
+    time_bucket_gapfill discipline) so the three downstream entropy
+    aggregations read the category-sized table instead of each
+    re-running the corpus groupBy — the raw input is scanned exactly
+    ONCE."""
+    staged = _entropy_sums(df, col_a, col_b)
     r6 = lambda c: (  # noqa: E731 — the cross-engine-exact floor round
         F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     )
@@ -749,9 +747,7 @@ def mutual_information(
     )
 
 
-def _entropy_sums(
-    df: DataFrame, col_a: str, col_b: str, checkpoint_joint: bool
-) -> DataFrame:
+def _entropy_sums(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
     """Shared entropy-sum staging for :func:`mutual_information` and
     :func:`theils_u`: ONE row (_n, _sab, _sa, _sb) where each _s* is
     Σ c·ln(c) over the joint / a-margin / b-margin exact counts
@@ -764,9 +760,7 @@ def _entropy_sums(
     )
     joint = ab.groupBy("_an", "_av", "_bn", "_bv").agg(
         F.count(F.lit(1)).alias("_c")
-    )
-    if checkpoint_joint:
-        joint = joint.localCheckpoint()
+    ).localCheckpoint()
     cd = F.col("_c").cast("double")
     s_ab = joint.agg(
         F.sum("_c").alias("_n"),
@@ -799,7 +793,6 @@ def theils_u(
     df: DataFrame,
     col_a: str,
     col_b: str,
-    checkpoint_joint: bool = True,
 ) -> DataFrame:
     """One row (n, h_a, h_b, mi, u_a_given_b, u_b_given_a) — Theil's
     uncertainty coefficient, the DIRECTIONAL member of the dependency
@@ -819,9 +812,8 @@ def theils_u(
 
     Scale shape: identical to :func:`mutual_information` — ONE
     groupBy(a, b) shuffle, category-sized margins, the same
-    ``checkpoint_joint`` localCheckpoint trade (False = fully lazy,
-    three scans)."""
-    staged = _entropy_sums(df, col_a, col_b, checkpoint_joint)
+    localCheckpoint of the joint counts (one input scan)."""
+    staged = _entropy_sums(df, col_a, col_b)
     r6 = lambda c: (  # noqa: E731 — the cross-engine-exact floor round
         F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     )
@@ -846,7 +838,6 @@ def cramers_v(
     col_a: str,
     col_b: str,
     max_cells: int = 1_000_000,
-    checkpoint_joint: bool = True,
 ) -> DataFrame:
     """One row (n, a_levels, b_levels, chi2, v) — Pearson's chi-square
     of the (col_a × col_b) contingency table and Cramér's V, its
@@ -872,11 +863,10 @@ def cramers_v(
     the label-statistic contract); margins join the CATEGORY-sized
     table (broadcast-scale sides). ``max_cells`` refuses an ID-like
     column in-path (the count rides the same aggregate that computes
-    n — no extra scan; the chi2_drift_many guard discipline).
-    ``checkpoint_joint`` (default True) materializes the joint counts
-    once — EAGER at call time, the README localCheckpoint-contract
-    trade — so margins and totals read the category-sized table;
-    False keeps the plan fully lazy at the price of three scans."""
+    n — no extra scan; the chi2_drift_many guard discipline). The
+    joint counts are materialized once — EAGER at call time, the
+    README localCheckpoint contract — so margins and totals read the
+    category-sized table (one input scan, not three)."""
     ab = df.select(
         F.col(col_a).cast("string").isNull().alias("_an"),
         F.coalesce(F.col(col_a).cast("string"), F.lit("")).alias("_av"),
@@ -885,9 +875,7 @@ def cramers_v(
     )
     joint = ab.groupBy("_an", "_av", "_bn", "_bv").agg(
         F.count(F.lit(1)).alias("_c")
-    )
-    if checkpoint_joint:
-        joint = joint.localCheckpoint()
+    ).localCheckpoint()
     # fresh key aliases on the margin sides: both derive from `joint`,
     # and same-name refs across a self-derived join resolve to ONE
     # attribute (the trivially-true-predicate trap)

@@ -165,7 +165,6 @@ def agreement_kappa(
     df: DataFrame,
     col_a: str,
     col_b: str,
-    checkpoint_confusion: bool = True,
 ) -> DataFrame:
     """One row (n, po, pe, kappa) — multi-category Cohen's kappa
     between two label columns: the chance-corrected agreement measure
@@ -191,19 +190,16 @@ def agreement_kappa(
     group count is |A|·|B| (label cardinalities; this is a LABEL
     statistic — profile cardinality first if a column might be
     ID-like) — then margin joins on the category-sized table only.
-    ``checkpoint_confusion`` (default True) materializes the confusion
-    table once (``localCheckpoint``) so the totals and both margins
-    read it instead of each re-running the corpus groupBy — the raw
-    input is scanned exactly ONCE; False keeps the plan fully lazy at
-    the price of three scans."""
+    The confusion table is materialized once (``localCheckpoint``) so
+    the totals and both margins read it instead of each re-running
+    the corpus groupBy — the raw input is scanned exactly ONCE."""
     a, b = F.col(col_a).cast("string"), F.col(col_b).cast("string")
     c = (
         df.filter(a.isNotNull() & b.isNotNull())
         .groupBy(a.alias("_a"), b.alias("_b"))
         .agg(F.count(F.lit(1)).alias("_n"))
     )
-    if checkpoint_confusion:
-        c = c.localCheckpoint()
+    c = c.localCheckpoint()
     tot = c.agg(
         F.sum("_n").alias("_t"),
         F.sum(F.when(F.col("_a") == F.col("_b"), F.col("_n"))).alias(
@@ -253,7 +249,6 @@ def fleiss_kappa(
     df: DataFrame,
     item_col: str,
     label_col: str,
-    checkpoint_counts: bool = True,
 ) -> DataFrame:
     """One row (n_items, n_raters, n_categories, pbar, pe, kappa) —
     Fleiss' kappa over a ratings table with one row per (item, rating):
@@ -280,14 +275,12 @@ def fleiss_kappa(
 
     Scale shape: ONE groupBy(item, label) count collapses the ratings
     (the corpus-sized shuffle), then every later pass runs on that
-    counts table or its item-/category-keyed rollups.
-    ``checkpoint_counts`` (default True) materializes the counts table
-    once (``localCheckpoint`` — EAGER at call time, the README
-    localCheckpoint-contract trade) so the per-item and per-category
-    branches read it instead of re-running the corpus groupBy; False
-    keeps the plan fully lazy at the price of two scans. The ragged-
-    panel refusal is IN-PATH (min/max ride the same final agg — no
-    extra scan)."""
+    counts table or its item-/category-keyed rollups. The counts table
+    is materialized once (``localCheckpoint`` — EAGER at call time,
+    the README localCheckpoint contract) so the per-item and
+    per-category branches read it instead of re-running the corpus
+    groupBy. The ragged-panel refusal is IN-PATH (min/max ride the
+    same final agg — no extra scan)."""
     lab = F.col(label_col).cast("string")
     c = (
         df.filter(lab.isNotNull() & F.col(item_col).isNotNull())
@@ -296,8 +289,7 @@ def fleiss_kappa(
         )
         .agg(F.count(F.lit(1)).alias("_n"))
     )
-    if checkpoint_counts:
-        c = c.localCheckpoint()
+    c = c.localCheckpoint()
     per_item = c.groupBy("_i").agg(
         F.sum("_n").alias("_r"),
         F.sum(F.col("_n") * F.col("_n")).alias("_s2"),

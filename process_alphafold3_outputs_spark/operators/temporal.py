@@ -74,7 +74,6 @@ def time_bucket_gapfill(
     agg: str = "avg",
     fill: str = "locf",
     max_buckets: int = 1_000_000,
-    checkpoint_buckets: bool = True,
 ) -> DataFrame:
     """(keys..., bucket, n, value) — ``agg`` of ``value_col`` per
     ``width``-second bucket, with EVERY bucket between each key's first
@@ -96,12 +95,11 @@ def time_bucket_gapfill(
     Refuses loudly if any key's span would emit more than
     ``max_buckets`` buckets — re-bucket coarser rather than explode.
 
-    ``checkpoint_buckets`` (default True) materializes the
-    bucket-bounded aggregate once (``localCheckpoint``) so the guard,
-    the spine, and the fill all read it — the raw stream is scanned
-    exactly ONCE. With False the plan stays fully lazy but the guard's
-    counting job and the main plan each rescan the source (2 scans of
-    100 TB vs 1 plus a bounded cache — the default is the scale shape).
+    The bucket-bounded aggregate is materialized once
+    (``localCheckpoint``, eager at call time) so the guard, the spine,
+    and the fill all read it — the raw stream is scanned exactly ONCE
+    (a lazy plan would rescan it for the guard's counting job: 2 scans
+    of 100 TB vs 1 plus a bounded cache).
     """
     keys = list(keys)
     if width <= 0:
@@ -120,10 +118,9 @@ def time_bucket_gapfill(
         F.count(F.col(value_col).cast("double")).cast("long").alias("n"),
         _r6(_agg_expr(agg, value_col)).alias("_v"),
     )
-    if checkpoint_buckets:
-        # materialize the bucket-bounded table ONCE: guard + spine +
-        # fill all read it, so the raw stream is scanned exactly once
-        bucketed = bucketed.localCheckpoint()
+    # materialize the bucket-bounded table ONCE: guard + spine + fill
+    # all read it, so the raw stream is scanned exactly once
+    bucketed = bucketed.localCheckpoint()
 
     spans = bucketed.groupBy(*keys).agg(
         F.min("bucket").alias("_lo"), F.max("bucket").alias("_hi")
@@ -803,7 +800,6 @@ def trend_theil_sen(
     x_col: str,
     y_col: str,
     max_points: int = 2_000,
-    checkpoint_points: bool = True,
 ) -> DataFrame:
     """(keys..., n, slope, intercept) — per-key THEIL–SEN trend: the
     median of all pairwise slopes (y_j − y_i)/(x_j − x_i), intercept =
@@ -831,13 +827,12 @@ def trend_theil_sen(
     one the self-join needs anyway): this estimator is for
     BUCKET-grain series (a decade of daily buckets is ~3.7k points —
     raise deliberately), never raw events; pre-aggregate with the
-    bucket rollup first. ``checkpoint_points`` (default True)
-    materializes the guarded point table once (``localCheckpoint``,
-    the time_bucket_gapfill discipline) — both self-join sides, the
-    sizes, and the residual pass read the bucket-grain table instead
-    of each re-running the upstream rollup (4 raw scans otherwise);
-    the guard fires at materialization, still loud. False keeps plan
-    construction fully lazy."""
+    bucket rollup first. The guarded point table is materialized once
+    (``localCheckpoint``, the time_bucket_gapfill discipline) — both
+    self-join sides, the sizes, and the residual pass read the
+    bucket-grain table instead of each re-running the upstream rollup
+    (4 raw scans otherwise); the guard fires at materialization, still
+    loud."""
     if not keys:
         raise ValueError("keys must be non-empty")
     if max_points < 2:
@@ -864,8 +859,7 @@ def trend_theil_sen(
         guarded_x.alias("_x"),
         F.col(y_col).cast("long").alias("_y"),
     )
-    if checkpoint_points:
-        pts = pts.localCheckpoint()
+    pts = pts.localCheckpoint()
     sizes = pts.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
     a = pts.select(
         *[F.col(k).alias(f"_ka_{k}") for k in keys],
@@ -921,7 +915,6 @@ def trend_mann_kendall(
     keys: Sequence[str],
     x_col: str,
     y_col: str,
-    checkpoint_points: bool = True,
 ) -> DataFrame:
     """(keys..., n, s_stat, var_s, z, trend) — the MANN–KENDALL trend
     significance test per key: is the monotone trend real, or noise?
@@ -947,10 +940,10 @@ def trend_mann_kendall(
     distinct-time formula) — a duplicate x is refused loudly in-path
     via a (key, x)-window count inside the y projection. Scale shape:
     the C(n,2) pair join is the :func:`trend_theil_sen` fan-out —
-    bucket-grain by contract; ``checkpoint_points`` (default True)
-    materializes the guarded point table once so both join sides and
-    the tie pass read it instead of re-running the upstream rollup
-    (the gapfill discipline); False keeps plan construction lazy."""
+    bucket-grain by contract; the guarded point table is materialized
+    once (``localCheckpoint``) so both join sides and the tie pass
+    read it instead of re-running the upstream rollup (the gapfill
+    discipline)."""
     if not keys:
         raise ValueError("keys must be non-empty")
     n_dup = F.count(F.lit(1)).over(Window.partitionBy(*keys, x_col))
@@ -973,8 +966,7 @@ def trend_mann_kendall(
         F.col(x_col).cast("long").alias("_x"),
         guarded_y.alias("_y"),
     )
-    if checkpoint_points:
-        pts = pts.localCheckpoint()
+    pts = pts.localCheckpoint()
     a = pts.select(
         *[F.col(k).alias(f"_ka_{k}") for k in keys],
         F.col("_x").alias("_xa"),
@@ -1044,7 +1036,6 @@ def trend_changepoint(
     keys: Sequence[str],
     x_col: str,
     y_col: str,
-    checkpoint_points: bool = True,
 ) -> DataFrame:
     """(keys..., n, cp_x, cusum_max) — offline CUSUM changepoint per
     key: WHERE did the level shift. The companion question to the
@@ -1069,10 +1060,10 @@ def trend_changepoint(
     Scale shape: one ordered window pass per key partition (cum-sum +
     row_number + the per-key totals over the same partition — one
     shuffle, one sort) and a rank-1 filter; bucket-grain inputs by
-    the trend-family contract. ``checkpoint_points`` (default True)
-    materializes the guarded point table once so the window pass and
-    the sizes read it instead of re-running the upstream rollup (the
-    gapfill discipline); False keeps plan construction lazy."""
+    the trend-family contract. The guarded point table is materialized
+    once (``localCheckpoint``) so the window pass and the sizes read
+    it instead of re-running the upstream rollup (the gapfill
+    discipline)."""
     if not keys:
         raise ValueError("keys must be non-empty")
     n_dup = F.count(F.lit(1)).over(Window.partitionBy(*keys, x_col))
@@ -1095,8 +1086,7 @@ def trend_changepoint(
         F.col(x_col).cast("long").alias("_x"),
         guarded_y.alias("_y"),
     )
-    if checkpoint_points:
-        pts = pts.localCheckpoint()
+    pts = pts.localCheckpoint()
     wk = Window.partitionBy(*keys)
     wo = wk.orderBy("_x").rowsBetween(Window.unboundedPreceding, 0)
     staged = pts.select(

@@ -5793,9 +5793,13 @@ def text_mix_doremi_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # out-edges — but both engines carry the dm * s term anyway.)
 # --------------------------------------------------------------------------
 def _ppr_oracle_sql() -> str:
+    # every CTE read more than once is MATERIALIZED: inlined, each round
+    # r{t+1} would recompute r{t} twice (through f{t} and d{t}) — 2^iters
+    # graph builds (~50 s against ~0.05 s on sf0.001)
     rounds = []
     for t in range(_PR_ITERS):
         prev = f"r{t}"
+        nxt = "MATERIALIZED " if t + 1 < _PR_ITERS else ""
         rounds.append(f"""
     f{t} AS (
         SELECT e.dst AS node, sum(r.rank / dg.outdeg) AS inflow
@@ -5806,7 +5810,7 @@ def _ppr_oracle_sql() -> str:
     d{t} AS (
         SELECT coalesce(sum(rank), 0) AS dm FROM {prev}
         WHERE node NOT IN (SELECT src FROM deg)),
-    r{t + 1} AS (
+    r{t + 1} AS {nxt}(
         SELECT n.node,
                (1 - {_PR_D}) * sv.s
                + {_PR_D} * (coalesce(f{t}.inflow, 0) + d{t}.dm * sv.s) AS rank
@@ -5815,11 +5819,12 @@ def _ppr_oracle_sql() -> str:
         LEFT JOIN f{t} ON f{t}.node = n.node
         CROSS JOIN d{t})""")
     return f"""
-    WITH ord AS (
+    WITH ord AS MATERIALIZED (
         SELECT source, row_number() OVER (ORDER BY source) - 1 AS i
         FROM (SELECT DISTINCT source FROM documents)),
-    k AS (SELECT CAST(count(*) AS DOUBLE) AS c, count(*) AS ki FROM ord),
-    edges AS (
+    k AS MATERIALIZED (
+        SELECT CAST(count(*) AS DOUBLE) AS c, count(*) AS ki FROM ord),
+    edges AS MATERIALIZED (
         SELECT a.source AS src, b.source AS dst
         FROM ord a JOIN k ON true JOIN ord b ON b.i = (a.i * 3 + 1) % k.ki
         WHERE a.source <> b.source
@@ -5827,19 +5832,20 @@ def _ppr_oracle_sql() -> str:
         SELECT a.source, b.source
         FROM ord a JOIN k ON true JOIN ord b ON b.i = (a.i * 7 + 2) % k.ki
         WHERE a.source <> b.source),
-    nodes AS (SELECT src AS node FROM edges
-              UNION SELECT dst FROM edges),
-    seeds AS (SELECT o.source AS node FROM ord o
-              JOIN nodes n ON n.node = o.source
-              WHERE o.i % 4 = 0),
+    nodes AS MATERIALIZED (SELECT src AS node FROM edges
+                           UNION SELECT dst FROM edges),
+    seeds AS MATERIALIZED (SELECT o.source AS node FROM ord o
+                           JOIN nodes n ON n.node = o.source
+                           WHERE o.i % 4 = 0),
     ks AS (SELECT CAST(count(*) AS DOUBLE) AS c FROM seeds),
-    sv AS (SELECT n.node,
-                  CASE WHEN s.node IS NOT NULL THEN 1.0 / ks.c
-                       ELSE 0.0 END AS s
-           FROM nodes n LEFT JOIN seeds s ON s.node = n.node CROSS JOIN ks),
-    deg AS (SELECT src, CAST(count(*) AS DOUBLE) AS outdeg
-            FROM edges GROUP BY src),
-    r0 AS (SELECT node, s AS rank FROM sv),
+    sv AS MATERIALIZED (
+        SELECT n.node,
+               CASE WHEN s.node IS NOT NULL THEN 1.0 / ks.c
+                    ELSE 0.0 END AS s
+        FROM nodes n LEFT JOIN seeds s ON s.node = n.node CROSS JOIN ks),
+    deg AS MATERIALIZED (SELECT src, CAST(count(*) AS DOUBLE) AS outdeg
+                         FROM edges GROUP BY src),
+    r0 AS MATERIALIZED (SELECT node, s AS rank FROM sv),
     {",".join(rounds)}
     SELECT node AS source, round(rank, 9) AS rank
     FROM r{_PR_ITERS}

@@ -123,6 +123,16 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def handles():
+    """The ``handles=`` list of the persisting corpus plans: every
+    DataFrame a plan appends is unpersisted after the test."""
+    persisted: list = []
+    yield persisted
+    for df in persisted:
+        df.unpersist()
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR

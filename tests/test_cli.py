@@ -116,8 +116,10 @@ def test_cli_releases_caches_when_a_sink_fails(spark, tmp_path, monkeypatch):
 
 def test_corpus_cli_releases_staged_blocks(spark, tmp_path, sf_dir):
     """``run`` releases what the corpus pipelines staged: two training
-    runs over different input files, then an audit and a token report,
-    on one borrowed session leave no persisted RDD behind."""
+    runs over different input files, an audit, a token report, and two
+    commands whose kernels localCheckpoint at call time (cramers-v,
+    trend --stat theil-sen), on one borrowed session leave no persisted
+    RDD behind."""
     from pyspark.sql import functions as F
 
     from process_alphafold3_outputs_spark import corpus_cli
@@ -126,11 +128,20 @@ def test_corpus_cli_releases_staged_blocks(spark, tmp_path, sf_dir):
     paths = [str(tmp_path / f"docs{i}.parquet") for i in range(2)]
     for i, path in enumerate(paths):
         docs.filter(F.col("doc_id") % 2 == i).write.parquet(path)
+    ev = str(tmp_path / "ev")
+    spark.createDataFrame(
+        [(i, 100 + i * 50, "t" + str(i % 2)) for i in range(60)],
+        "event_id long, ts long, event_type string",
+    ).write.parquet(ev)
     commands = [
         ["training", "--documents", paths[0]],
         ["training", "--documents", paths[1]],
         ["audit", "--documents", paths[1]],
         ["report-tokens", "--documents", paths[1], "--factor", "src1=2.0"],
+        ["cramers-v", "--input", paths[1], "--col-a", "lang",
+         "--col-b", "source"],
+        ["trend", "--input", ev, "--ts-col", "ts", "--width", "1000",
+         "--stat", "theil-sen"],
     ]
     jrdds = spark.sparkContext._jsc
     before = set(jrdds.getPersistentRDDs().keySet().toArray())

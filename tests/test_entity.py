@@ -284,7 +284,7 @@ def test_pairwise_cluster_eval_hand_computed(spark):
     """pairwise_cluster_eval (r14): textbook 6-item split (tp=2, fp=2,
     fn=2, P=R=F1=0.5, ARI=(2-16/15)/(4-16/15)); identical clusterings
     -> all 1.0; all-singletons -> NULL ratios (no pairs); NULL labels
-    excluded; empty input -> zero row; lazy form fires no jobs."""
+    excluded; empty input -> zero row."""
     import math
 
     from process_alphafold3_outputs_spark.operators.entity import (
@@ -321,10 +321,3 @@ def test_pairwise_cluster_eval_hand_computed(spark):
     # empty input
     r = run([])
     assert (r.n_items, r.pred_clusters, r.tp, r.ari) == (0, 0, None, None)
-    # lazy form: zero jobs at plan build
-    sc = spark.sparkContext
-    df = spark.createDataFrame([(1, "a", "x")], "id long, p string, t string")
-    sc.setJobGroup("pce-lazy", "plan build")
-    _ = pairwise_cluster_eval(df, "p", "t", checkpoint_joint=False)
-    assert sc.statusTracker().getJobIdsForGroup("pce-lazy") == []
-    sc.setJobGroup("", "")

@@ -70,7 +70,7 @@ def test_connected_components_chain_vs_greedy(spark):
     # it never links 1 to 8 (no direct pair), components do
 
 
-def test_clean_corpus_cluster_vs_greedy_drop_rule(spark):
+def test_clean_corpus_cluster_vs_greedy_drop_rule(spark, handles):
     """Pair graph (a,c),(b,c) with no direct a—b pair: greedy drops only
     c (it is the higher id of both pairs) and keeps TWO members of one
     duplicate cluster; cluster mode keeps exactly the min-id
@@ -92,14 +92,14 @@ def test_clean_corpus_cluster_vs_greedy_drop_rule(spark):
         r.doc_id
         for r in clean_corpus(
             docs, jaccard_threshold=0.3, min_words=5, max_words=100,
-            stage=False,
+            handles=handles,
         ).collect()
     }
     clustered = {
         r.doc_id
         for r in clean_corpus(
             docs, jaccard_threshold=0.3, min_words=5, max_words=100,
-            stage=False, near_dedup="clusters",
+            handles=handles, near_dedup="clusters",
         ).collect()
     }
     assert greedy == {1, 2}      # two survivors from ONE cluster
@@ -1139,7 +1139,7 @@ def test_token_report_equals_materialized_expansion(spark):
     )
 
 
-def test_round7_operators_handle_empty_corpus(spark):
+def test_round7_operators_handle_empty_corpus(spark, handles):
     """Empty-shipment sweep for the round-7 additions: plan, return 0
     rows (or a zero model for the trainer), never raise."""
     from pyspark.sql import functions as F
@@ -1159,8 +1159,8 @@ def test_round7_operators_handle_empty_corpus(spark):
         lambda: text.ccnet_buckets(empty),
         lambda: dedup.contamination_spans(empty, empty),
         lambda: dedup.strip_contamination(empty, empty),
-        lambda: filter_audit(empty, stage=False),
-        lambda: token_report(empty, {"src0": 2.0}, stage=False),
+        lambda: filter_audit(empty, handles=handles),
+        lambda: token_report(empty, {"src0": 2.0}, handles=handles),
     ]
     for i, op in enumerate(ops):
         assert op().count() == 0, f"round-7 op #{i} returned rows"
@@ -1215,7 +1215,7 @@ def _en_sentence(i: int) -> str:
     )
 
 
-def test_clean_corpus_auto_gate_duplicate_heavy_picks_bands(spark):
+def test_clean_corpus_auto_gate_duplicate_heavy_picks_bands(spark, handles):
     """400 docs in 40 near-duplicate groups of 10 (each copy appends a
     distinct token — exact dedup cannot collapse them): the density
     probe must route to minhash_bands, and the auto output must equal
@@ -1232,18 +1232,20 @@ def test_clean_corpus_auto_gate_duplicate_heavy_picks_bands(spark):
     assert corpus._resolve_near_dedup(docs, 4, 3, "text") == "minhash_bands"
     auto = {
         r.doc_id
-        for r in corpus.clean_corpus(docs, stage=False, max_words=100).collect()
+        for r in corpus.clean_corpus(
+            docs, handles=handles, max_words=100
+        ).collect()
     }
     explicit = {
         r.doc_id
         for r in corpus.clean_corpus(
-            docs, stage=False, max_words=100, near_dedup="minhash_bands"
+            docs, handles=handles, max_words=100, near_dedup="minhash_bands"
         ).collect()
     }
     assert auto == explicit and auto  # routed to bands, non-empty
 
 
-def test_clean_corpus_auto_gate_benign_picks_pairs(spark):
+def test_clean_corpus_auto_gate_benign_picks_pairs(spark, handles):
     """400 all-distinct docs: density ~0 — auto must keep the exact-
     Jaccard greedy path and match its output."""
     from process_alphafold3_outputs_spark.plans import corpus
@@ -1254,12 +1256,14 @@ def test_clean_corpus_auto_gate_benign_picks_pairs(spark):
     assert corpus._resolve_near_dedup(docs, 4, 3, "text") == "greedy"
     auto = {
         r.doc_id
-        for r in corpus.clean_corpus(docs, stage=False, max_words=100).collect()
+        for r in corpus.clean_corpus(
+            docs, handles=handles, max_words=100
+        ).collect()
     }
     explicit = {
         r.doc_id
         for r in corpus.clean_corpus(
-            docs, stage=False, max_words=100, near_dedup="greedy"
+            docs, handles=handles, max_words=100, near_dedup="greedy"
         ).collect()
     }
     assert auto == explicit and auto
@@ -1524,7 +1528,7 @@ def test_round8_operators_handle_empty_corpus(spark):
     assert dedup.duplicate_density(empty) == 0.0
 
 
-def test_clean_corpus_containment_mode_drops_contained_copy(spark):
+def test_clean_corpus_containment_mode_drops_contained_copy(spark, handles):
     """Pipeline containment mode: the short doc quoted inside a longer
     one is dropped, the container survives — and greedy (symmetric
     Jaccard) keeps both, so the modes genuinely differ."""
@@ -1542,21 +1546,21 @@ def test_clean_corpus_containment_mode_drops_contained_copy(spark):
     cont = {
         r.doc_id
         for r in clean_corpus(
-            docs, stage=False, max_words=200,
+            docs, handles=handles, max_words=200,
             near_dedup="containment", containment_threshold=0.9,
         ).collect()
     }
     greedy = {
         r.doc_id
         for r in clean_corpus(
-            docs, stage=False, max_words=200, near_dedup="greedy",
+            docs, handles=handles, max_words=200, near_dedup="greedy",
         ).collect()
     }
     assert cont == {1}        # contained doc 2 dropped, container kept
     assert greedy == {1, 2}   # symmetric screen missed the subset dup
 
 
-def test_auto_gate_cache_keyed_on_probed_population(spark):
+def test_auto_gate_cache_keyed_on_probed_population(spark, handles):
     """The probe cache must key on the population actually probed
     (judge-advice r9): two clean_corpus calls on the SAME docs with
     different gates probe different survivor sets and must each get a
@@ -1581,18 +1585,18 @@ def test_auto_gate_cache_keyed_on_probed_population(spark):
     )
     corpus.clear_auto_mode_cache()
     # gate A keeps only the heavy short docs -> bands
-    plan_a = corpus.clean_corpus(docs, stage=False, max_words=20)
+    plan_a = corpus.clean_corpus(docs, handles=handles, max_words=20)
     assert plan_a.sameSemantics(
         corpus.clean_corpus(
-            docs, stage=False, max_words=20, near_dedup="minhash_bands"
+            docs, handles=handles, max_words=20, near_dedup="minhash_bands"
         )
     )
     # gate B (same docs, same plan hash for `docs`) keeps only the
     # benign long docs -> must re-probe and pick greedy, not reuse A
-    plan_b = corpus.clean_corpus(docs, stage=False, min_words=20)
+    plan_b = corpus.clean_corpus(docs, handles=handles, min_words=20)
     assert plan_b.sameSemantics(
         corpus.clean_corpus(
-            docs, stage=False, min_words=20, near_dedup="greedy"
+            docs, handles=handles, min_words=20, near_dedup="greedy"
         )
     )
     # standalone probe over the FULL docs (collapse flavor) sees the
@@ -1601,7 +1605,7 @@ def test_auto_gate_cache_keyed_on_probed_population(spark):
     corpus.clear_auto_mode_cache()
 
 
-def test_auto_gate_resolved_plan_is_explicit_plan(spark):
+def test_auto_gate_resolved_plan_is_explicit_plan(spark, handles):
     """The auto gate only SELECTS a mode — the resulting plan must be
     semantically identical to the explicitly requested mode (no hidden
     plan divergence behind the probe)."""
@@ -1613,8 +1617,10 @@ def test_auto_gate_resolved_plan_is_explicit_plan(spark):
     )
     corpus._AUTO_MODE_CACHE.clear()
     mode = corpus._resolve_near_dedup(docs, 4, 3, "text")
-    auto_plan = corpus.clean_corpus(docs, stage=False)
-    explicit_plan = corpus.clean_corpus(docs, stage=False, near_dedup=mode)
+    auto_plan = corpus.clean_corpus(docs, handles=handles)
+    explicit_plan = corpus.clean_corpus(
+        docs, handles=handles, near_dedup=mode
+    )
     assert auto_plan.sameSemantics(explicit_plan)
 
 

@@ -1004,8 +1004,7 @@ def test_cramers_v_reference_and_edges(spark):
     """Cramér's V (r14): hand-computed 2x2 (chi2 matches the textbook
     n(ad-bc)^2/(r1 r2 c1 c2) form), perfect association -> v 1.0,
     exact independence -> chi2 0 (phi2 clamp), constant column -> v
-    NULL, NULL is a category, empty input, max_cells in-path refusal,
-    lazy with checkpoint_joint=False."""
+    NULL, NULL is a category, empty input, max_cells in-path refusal."""
     import math
 
     import pytest as _pt
@@ -1046,13 +1045,6 @@ def test_cramers_v_reference_and_edges(spark):
     # max_cells: counted IN-PATH refusal at action time
     with _pt.raises(Exception, match="max_cells=2"):
         run([("a", "x"), ("b", "y"), ("c", "z")], max_cells=2)
-    # lazy form: zero jobs at plan build
-    sc = spark.sparkContext
-    df = spark.createDataFrame([("a", "x")], "a string, b string")
-    sc.setJobGroup("cv-lazy", "plan build")
-    _ = cramers_v(df, "a", "b", checkpoint_joint=False)
-    assert sc.statusTracker().getJobIdsForGroup("cv-lazy") == []
-    sc.setJobGroup("", "")
 
 
 def test_theils_u_directionality_and_edges(spark):

@@ -156,8 +156,7 @@ def test_fleiss_kappa_hand_computed_and_edges(spark):
     rationals pbar=2/3, pe=5/9, kappa=1/4); perfect panel agreement =
     1.0; all-one-category panel (pe == 1) -> NULL kappa; ragged panel
     and single-rater panel refused loudly; NULL labels excluded BEFORE
-    the panel check; empty input -> n_items=0 all-NULL row; lazy with
-    checkpoint_counts=False (zero jobs at plan build)."""
+    the panel check; empty input -> n_items=0 all-NULL row."""
     import pytest as _pt
 
     from process_alphafold3_outputs_spark.operators.ranking import (
@@ -200,13 +199,6 @@ def test_fleiss_kappa_hand_computed_and_edges(spark):
     empty = spark.createDataFrame([], "i long, j string")
     r = fleiss_kappa(empty, "i", "j").collect()[0]
     assert (r.n_items, r.n_raters, r.kappa) == (0, None, None)
-    # lazy form: plan construction fires ZERO Spark jobs
-    sc = spark.sparkContext
-    df = spark.createDataFrame([(1, "a")] * 2, "i long, j string")
-    sc.setJobGroup("fleiss-lazy", "plan build")
-    _ = fleiss_kappa(df, "i", "j", checkpoint_counts=False)
-    assert sc.statusTracker().getJobIdsForGroup("fleiss-lazy") == []
-    sc.setJobGroup("", "")
 
 
 def test_calibration_hand_computed_and_edges(spark):

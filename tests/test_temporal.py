@@ -1037,8 +1037,8 @@ def test_watch_events_trend_stream_equals_batch_and_replays(spark, tmp_path):
 def test_trend_theil_sen_robust_vs_numpy_and_guards(spark):
     """Theil-Sen (r13): matches the numpy median-of-pairwise-slopes
     reference; shrugs off the outlier that drags OLS; degenerate keys
-    present with NULL fits; the max_points guard refuses IN-PATH at
-    action time (plan build fires no job)."""
+    present with NULL fits; the max_points guard refuses an oversized
+    key loudly."""
     import numpy as np
     import pytest as _pt
 
@@ -1081,20 +1081,8 @@ def test_trend_theil_sen_robust_vs_numpy_and_guards(spark):
     for k in ("single", "const_x"):
         assert (out[k].slope, out[k].intercept) == (None, None)
     assert out["const_x"].n == 2
-    # guards: with checkpoint_points=False the plan builds with ZERO
-    # jobs and refuses in-path at action time; the default (eager
-    # bucket-table materialization, the gapfill discipline) refuses
-    # loudly at call time instead — both are loud, neither silent
-    jg = spark.sparkContext
-    jg.setJobGroup("theil-build", "lazy-guard")
-    plan = trend_theil_sen(
-        df, ["k"], "x", "y", max_points=5, checkpoint_points=False
-    )
-    ids = jg.statusTracker().getJobIdsForGroup("theil-build")
-    jg.setJobGroup("theil-build-done", "done")
-    assert list(ids) == []
-    with _pt.raises(Exception, match="max_points"):
-        plan.collect()
+    # guard: the eager point-table materialization (the gapfill
+    # discipline) refuses an oversized key loudly, never silently
     with _pt.raises(Exception, match="max_points"):
         trend_theil_sen(df, ["k"], "x", "y", max_points=5).collect()
     with _pt.raises(ValueError, match="keys"):
